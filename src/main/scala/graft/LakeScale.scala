@@ -48,24 +48,21 @@ object LakeScale {
           i * 1000L, i * 1000L + 999L))
       t.commitAndIndex(Lake.Delta(0, -1, "create", "k", Nil, Nil,
         full = true, adds = entries, removes = Nil,
-        tombstoneAdds = Nil, tombstoneRemoves = Nil), entries, Nil)
+        tombstoneAdds = Nil, tombstoneRemoves = Nil))
       val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
       def manifestBytes(v: Int): Long =
         fs.getFileStatus(new Path(root, f"_manifests/v$v%05d.json")).getLen
 
       // steady state: one-file merges (remove one entry, add one), the
       // shape a streaming mergeEpoch sink commits all day
-      var state = entries
       var deltaBytes = 0L
       val tCommit0 = System.nanoTime()
       (1 to commitsPerPoint).foreach { v =>
         val add = Lake.FileEntry(f"data/part-new-$v%05d.parquet", 1000L,
           (v - 1) * 1000L, (v - 1) * 1000L + 999L)
-        val rm = state.head.path
-        state = state.tail :+ add
         t.commitAndIndex(Lake.Delta(v, v - 1, "merge", "k", Nil, Nil,
-          full = false, adds = Seq(add), removes = Seq(rm),
-          tombstoneAdds = Nil, tombstoneRemoves = Nil), state, Nil)
+          full = false, adds = Seq(add), removes = Seq(entries(v - 1).path),
+          tombstoneAdds = Nil, tombstoneRemoves = Nil))
         deltaBytes += manifestBytes(v)
       }
       val commitMs = (System.nanoTime() - tCommit0) / 1e6 / commitsPerPoint
@@ -96,7 +93,7 @@ object LakeScale {
       // the counterfactual: what every commit would write (and every cold
       // planning pass would parse) under the old full-snapshot design
       val fullBytes = Lake.toJson(Lake.Manifest(latest, latest - 1, "merge",
-        "k", state)).length.toLong
+        "k", t.manifest(latest).files)).length.toLong
 
       // the checkpoint anchor's on-disk size — the driver-materialization
       // envelope SCALING.md derives bytes/entry from

@@ -164,7 +164,8 @@ object Run {
           println(s"[lake] created $root v0")
         case "lake-merge" =>
           need(3)
-          val s = table.mergeWithRetry(spark.read.parquet(args(2)))
+          val updates = spark.read.parquet(args(2))
+          val s = table.withRetry(table.merge(updates))
           println(s"[lake] merged -> v${s.version} " +
             s"(kept ${s.keptFiles}, rewrote ${s.rewrittenFiles})")
         case "lake-delete" =>
@@ -189,7 +190,8 @@ object Run {
           println(s"[lake] read -> ${args(2)}")
         case "lake-sortby" =>
           need(4)
-          val s = table.compactSortByWithRetry(args(2).toInt, args.drop(3).toSeq)
+          val s = table.withRetry(
+            table.compactSortBy(args(2).toInt, args.drop(3).toSeq: _*))
           println(s"[lake] sort-clustered by (${args.drop(3).mkString(", ")}) " +
             s"-> v${s.version} (${s.addedFiles} files)")
         case "lake-changes" =>
@@ -228,28 +230,29 @@ object Run {
             s"-> v${s.version} (${s.addedFiles} files)")
         case "lake-rename" =>
           need(4)
-          val s = table.renameColumnWithRetry(args(2), args(3))
+          val s = table.withRetry(table.renameColumn(args(2), args(3)))
           println(s"[lake] renamed ${args(2)} -> ${args(3)} at v${s.version} " +
             "(metadata-only)")
         case "lake-drop-column" =>
           need(3)
-          val s = table.dropColumnWithRetry(args(2))
+          val s = table.withRetry(table.dropColumn(args(2)))
           println(s"[lake] dropped ${args(2)} at v${s.version} (metadata-only)")
         case "lake-add-column" =>
           need(4)
-          val s = table.addColumnWithRetry(args(2), args.drop(3).mkString(" "))
+          val s = table.withRetry(
+            table.addColumn(args(2), args.drop(3).mkString(" ")))
           println(s"[lake] added ${args(2)} ${args.drop(3).mkString(" ")} " +
             s"at v${s.version} (metadata-only)")
         case "lake-alter-column" =>
           need(4)
-          val s = table.alterColumnTypeWithRetry(args(2),
-            args.drop(3).mkString(" "))
+          val s = table.withRetry(table.alterColumnType(args(2),
+            args.drop(3).mkString(" ")))
           println(s"[lake] widened ${args(2)} to ${args.drop(3).mkString(" ")} " +
             s"at v${s.version} (metadata-only)")
         case "lake-partition-by" =>
           need(2) // zero columns = evolve back to an unpartitioned layout
           val cols = args.drop(2).toSeq
-          val s = table.alterPartitioningWithRetry(cols)
+          val s = table.withRetry(table.alterPartitioning(cols))
           println(s"[lake] partition spec -> " +
             (if (cols.isEmpty) "(unpartitioned)" else cols.mkString(", ")) +
             s" at v${s.version} (metadata-only; existing files keep their layout)")

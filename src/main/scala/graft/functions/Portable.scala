@@ -37,8 +37,6 @@ object Portable {
     * MinHash affine family (a, b < 2^31, h < 2^31 → a*h+b < 2^62). */
   val P31: Long = 2147483647L
 
-  def hash31(c: Column): Column = hash60(c) % P31
-
   /** Whitespace tokenizer; empty text → empty array (bare split would yield
     * [""]). DuckDB: string_split_regex(trim(text), '\s+') with same guard. */
   def tokens(text: Column): Column = {

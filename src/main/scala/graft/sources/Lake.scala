@@ -1594,8 +1594,8 @@ object Lake {
         .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L * i))
         .withColumn("o_year", lit(1996)))
     }
-    t.compactWhereWithRetry(col("o_year") === 1996, 4,
-      Some(("sort", Seq("o_totalprice"))))
+    t.withRetry(t.compactWhere(col("o_year") === 1996, 4,
+      Some(("sort", Seq("o_totalprice")))))
     t.read()
       .filter(col("o_year") === 1996 && col("o_totalprice") < 50000)
       .groupBy("o_orderpriority")
@@ -2468,13 +2468,16 @@ object Lake {
   }
 
   /** A resolved state as a full, self-anchoring Delta (legacy-manifest
-    * reads and the create/compact/restore/clone commit shape). */
-  private[graft] def fullDelta(m: Manifest): Delta =
-    Delta(m.version, m.parentVersion, m.operation, m.keyCol, m.statsCols,
-      m.partitionCols, full = true, adds = m.files, removes = Nil,
-      tombstoneAdds = m.tombstones, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols)
+    * reads, the restore/clone commit shape, and the base of every verb's
+    * next delta) — the one place a manifest's carried metadata is copied
+    * field by field. */
+  private[graft] def fullDelta(m: Manifest): Delta = {
+    import m._
+    Delta(version, parentVersion, operation, keyCol, statsCols, partitionCols,
+      full = true, adds = files, removes = Nil, tombstoneAdds = tombstones,
+      tombstoneRemoves = Nil, schemaDdl = schemaDdl, columnMap = columnMap,
+      constraints = constraints, droppedCols = droppedCols)
+  }
 
   /** Result of a [[LakeTable.merge]] — what a COW commit did. */
   case class MergeStats(version: Int, keptFiles: Int, rewrittenFiles: Int,
@@ -3263,21 +3266,11 @@ class LakeTable(spark: SparkSession, val root: String) {
         case None => f
       }
     }
-    val newStatsCols = (m.statsCols ++ physCols).distinct
-    commitAndIndex(Delta(v + 1, v, s"analyze-${physCols.mkString("-")}",
-      m.keyCol, newStatsCols, m.partitionCols, full = true,
-      adds = newFiles, removes = Nil, tombstoneAdds = m.tombstones,
-      tombstoneRemoves = Nil, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap, constraints = m.constraints, droppedCols = m.droppedCols),
-      newFiles, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"analyze-${physCols.mkString("-")}")
+      .copy(statsCols = (m.statsCols ++ physCols).distinct, full = true,
+        adds = newFiles, tombstoneAdds = m.tombstones))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
-
-  def analyzeColumnsWithRetry(cols: Seq[String],
-                              maxAttempts: Int = 3,
-                              where: Option[org.apache.spark.sql.Column] = None)
-      : MergeStats =
-    withRetry(maxAttempts)(analyzeColumns(cols, where))
 
   /** ALTER TABLE … ADD CONSTRAINT — a named CHECK expression (LOGICAL
     * column names) every future write enforces per row, in the write
@@ -3296,35 +3289,19 @@ class LakeTable(spark: SparkSession, val root: String) {
     require(violating == 0L,
       s"cannot add CHECK constraint '$name': existing rows violate " +
         s"($checkExpr)")
-    commitAndIndex(Delta(v + 1, v, s"add-constraint-$name", m.keyCol,
-      m.statsCols, m.partitionCols, full = false, adds = Nil, removes = Nil,
-      tombstoneAdds = Nil, tombstoneRemoves = Nil, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints + (name -> checkExpr),
-      droppedCols = m.droppedCols),
-      m.files, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"add-constraint-$name")
+      .copy(constraints = m.constraints + (name -> checkExpr)))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
 
   def dropConstraint(name: String): MergeStats = {
     val v = latestVersion
     val m = manifest(v)
     require(m.constraints.contains(name), s"no constraint '$name'")
-    commitAndIndex(Delta(v + 1, v, s"drop-constraint-$name", m.keyCol,
-      m.statsCols, m.partitionCols, full = false, adds = Nil, removes = Nil,
-      tombstoneAdds = Nil, tombstoneRemoves = Nil, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap, constraints = m.constraints - name,
-      droppedCols = m.droppedCols),
-      m.files, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"drop-constraint-$name")
+      .copy(constraints = m.constraints - name))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
-
-  def addConstraintWithRetry(name: String, checkExpr: String,
-                             maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(addConstraint(name, checkExpr))
-
-  def dropConstraintWithRetry(name: String, maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(dropConstraint(name))
 
   /** [[snapshot]] in PHYSICAL names — the internal form every rewrite
     * verb and layout compaction consumes (their output files must store
@@ -3720,10 +3697,20 @@ class LakeTable(spark: SparkSession, val root: String) {
         s"lake commit lost the race for version ${d.version} at $dest")
   }
 
-  /** Commit + index: the committing verb already knows the new resolved
-    * state, so cache it (the next planning pass replays zero deltas) and
-    * drop a parquet checkpoint every `checkpointInterval`-th non-anchor
-    * commit to bound every future cold resolution.
+  /** The commit after `m`: version + 1 on parent `m.version`, carrying
+    * m's table metadata (key, stats and partition columns, schema, column
+    * map, constraints, dropped columns) with an empty change set — every
+    * verb builds its delta here and states only what it changes. */
+  private def nextDelta(m: Manifest, operation: String): Delta =
+    fullDelta(m).copy(version = m.version + 1, parentVersion = m.version,
+      operation = operation, full = false, adds = Nil, tombstoneAdds = Nil)
+
+  /** Commit + index: cache the committed version's resolved state — the
+    * same fold over its parent that cold readers run ([[applyDelta]]), so
+    * the next planning pass replays zero deltas and can never see a state
+    * a cold reader would not — and drop a parquet checkpoint every
+    * `checkpointInterval`-th non-anchor commit to bound every future cold
+    * resolution.
     *
     * `rebaseEnvelope` opts the commit into the DISJOINT-COMMIT FAST
     * PATH: on losing the version race, if every interleaved winner is a
@@ -3735,34 +3722,31 @@ class LakeTable(spark: SparkSession, val root: String) {
     * writers merging different key slices of a big table then cost two
     * commits, not a commit plus a full replay. Any overlap, anchor
     * commit, tombstone movement, or vacuum race falls back to the loud
-    * ConcurrentModificationException that `withRetry` replays — the
+    * ConcurrentModificationException that [[withRetry]] replays — the
     * fast path can only decline, never change a result. The envelope
     * thunk is evaluated ONLY on an actual race. Returns the committed
     * version. */
-  private[graft] def commitAndIndex(d: Delta, files: Seq[FileEntry],
-                                    tombs: Seq[FileEntry],
+  private[graft] def commitAndIndex(d: Delta,
                                     rebaseEnvelope: Option[() => (Long, Long)] = None)
       : Int = {
-    def index(v: Int, fs: Seq[FileEntry], ts: Seq[FileEntry],
-              full: Boolean): Unit = {
-      stateCache.put(s"$root@$v", (fs, ts))
-      if (!full && v > 0 && v % checkpointInterval == 0)
-        writeCheckpoint(v, fs, ts)
+    def index(c: Delta): Int = {
+      val (pf, pt) = if (c.full) (Nil, Nil) else resolveState(c.parentVersion)
+      val (files, tombs) = applyDelta(pf, pt, c)
+      stateCache.put(s"$root@${c.version}", (files, tombs))
+      if (!c.full && c.version > 0 && c.version % checkpointInterval == 0)
+        writeCheckpoint(c.version, files, tombs)
+      c.version
     }
     try {
       commitDelta(d)
-      index(d.version, files, tombs, d.full)
-      d.version
+      index(d)
     } catch {
       case e: java.util.ConcurrentModificationException =>
         val rebased = rebaseEnvelope match {
           case Some(env) if !d.full && d.tombstoneAdds.isEmpty &&
               d.tombstoneRemoves.isEmpty =>
             val (lo, hi) = env()
-            tryRebase(d, lo, hi).map { case (d2, f2, t2) =>
-              index(d2.version, f2, t2, full = false)
-              d2.version
-            }
+            tryRebase(d, lo, hi).map(index)
           case _ => None
         }
         rebased.getOrElse(throw e)
@@ -3770,11 +3754,10 @@ class LakeTable(spark: SparkSession, val root: String) {
   }
 
   /** Attempt the disjoint rebase of `d` (probe envelope [lo, hi]) onto
-    * the current latest; None = not provably disjoint, caller replays.
-    * A second race inside the fast path throws back to the replay
-    * loop. */
-  private def tryRebase(d: Delta, lo: Long,
-                        hi: Long): Option[(Delta, Seq[FileEntry], Seq[FileEntry])] = {
+    * the current latest, returning the committed delta; None = not
+    * provably disjoint, caller replays. A second race inside the fast
+    * path throws back to the replay loop. */
+  private def tryRebase(d: Delta, lo: Long, hi: Long): Option[Delta] = {
     val newLatest = latestVersion
     val ourRemoves = d.removes.toSet
     var w = d.version
@@ -3819,18 +3802,16 @@ class LakeTable(spark: SparkSession, val root: String) {
       w += 1
     }
     // winners proven disjoint: splice our delta onto their state
-    val (bf, bt) = resolveState(newLatest)
-    val f2 = bf.filterNot(f => ourRemoves(f.path)) ++ d.adds
     val d2 = d.copy(version = newLatest + 1, parentVersion = newLatest,
       commitTs = -1L)
     commitDelta(d2)
-    Some((d2, f2, bt))
+    Some(d2)
   }
 
   /** Legacy test seam: commit a fully-resolved state as a self-anchoring
     * delta. */
   private[graft] def commit(m: Manifest): Unit =
-    commitAndIndex(fullDelta(m), m.files, m.tombstones)
+    commitAndIndex(fullDelta(m))
 
   /** Write `df` as fresh data files clustered on `keyCol` and return their
     * manifest entries. Files land in a scratch dir first, are renamed into
@@ -4426,7 +4407,7 @@ class LakeTable(spark: SparkSession, val root: String) {
     commitAndIndex(Delta(0, -1, "create", keyCol, statsCols, partitionBy,
       full = true, adds = files, removes = Nil,
       tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = Some(readSchema.toDDL)), files, Nil)
+      schemaDdl = Some(readSchema.toDDL)))
   }
 
   /** Refusal gate for key-addressed verbs on a keyless (append-log)
@@ -4654,45 +4635,28 @@ class LakeTable(spark: SparkSession, val root: String) {
   def merge(updates: DataFrame, newFileCountHint: Int = 0): MergeStats =
     mergeTagged(updates, "merge", newFileCountHint)
 
-  /** Optimistic-retry loop shared by every verb: an attempt that loses
-    * the version race re-reads the NEW latest snapshot and REPLAYS the
-    * verb against it — the standard lakehouse retry. Safe because each
+  /** Optimistic-retry loop shared by every verb — `t.withRetry(t.merge(df))`
+    * runs the verb up to 3 times: an attempt that loses the version race
+    * re-reads the NEW latest snapshot and REPLAYS the verb against it,
+    * and the third lost race throws its ConcurrentModificationException —
+    * the standard lakehouse retry. Safe because each
     * verb is expressed against table state (anti-join + union / rewrite
     * of the CURRENT latest), not a pinned version. Data files written by
     * a lost attempt are unreferenced orphans (never manifested) —
     * harmless until a cleanup sweep, exactly like aborted-commit files
     * in any COW format. */
-  private def withRetry[T](maxAttempts: Int)(op: => T): T = {
+  def withRetry[T](op: => T): T = {
     var attempt = 1
     while (true) {
       try return op
       catch {
         case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
+          if (attempt >= 3) throw e
           attempt += 1
       }
     }
     throw new IllegalStateException("unreachable")
   }
-
-  def mergeWithRetry(updates: DataFrame, maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(merge(updates))
-
-  def deleteWithRetry(keys: DataFrame, maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(delete(keys))
-
-  def deleteDeferredWithRetry(keys: DataFrame, maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(deleteDeferred(keys))
-
-  def compactWithRetry(numFiles: Int, maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(compact(numFiles))
-
-  def compactZOrderWithRetry(numFiles: Int, c1: String, c2: String,
-                             maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(compactZOrder(numFiles, c1, c2))
-
-  def restoreWithRetry(version: Int, maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(restore(version))
 
   /** Outstanding-tombstone integration shared by the mutating verbs — the
     * deletion-vector semantics open table formats apply inside every verb:
@@ -4704,28 +4668,26 @@ class LakeTable(spark: SparkSession, val root: String) {
     *    row again. Safe because every file whose range covers such a key
     *    is in the verb's hit set — the old physical rows are gone.
     *
-    * Returns (tombstoneAdds, tombstoneRemoves, resolved tombstones) for
-    * the commit. `reintroduced` is the key set the verb writes fresh rows
-    * for (None = pure delete, tombstones stand). */
+    * Returns (tombstoneAdds, tombstoneRemoves) for the commit.
+    * `reintroduced` is the key set the verb writes fresh rows for (None =
+    * pure delete, tombstones stand). */
   private def foldTombstones(m: Manifest, reintroduced: Option[DataFrame])
-      : (Seq[FileEntry], Seq[String], Seq[FileEntry]) =
+      : (Seq[FileEntry], Seq[String]) =
     (tombstoneKeys(m), reintroduced) match {
-      case (None, _) => (Nil, Nil, Nil)
-      case (Some(_), None) => (Nil, Nil, m.tombstones)
       case (Some(tk), Some(keys)) =>
         val k = keys.select(col(keys.columns.head).as(m.keyCol)).distinct()
         // no collision → tombstone files carry byte-identically (and the
         // change feed's carried-scan shortcut keeps recognizing them)
         val collides =
           tk.join(k, Seq(m.keyCol), "left_semi").limit(1).count() > 0
-        if (!collides) (Nil, Nil, m.tombstones)
+        if (!collides) (Nil, Nil)
         else {
           val surviving = tk.join(k, Seq(m.keyCol), "left_anti")
           // empty survivors → writeDataFiles drops the empty part file
           // and the table comes out CLEAN
-          val rewrittenTombs = writeDataFiles(surviving, m.keyCol, 1)
-          (rewrittenTombs, m.tombstones.map(_.path), rewrittenTombs)
+          (writeDataFiles(surviving, m.keyCol, 1), m.tombstones.map(_.path))
         }
+      case _ => (Nil, Nil)
     }
 
   /** [lo, hi] envelope of a file-entry set; (0, -1) = empty (disjoint
@@ -4815,18 +4777,14 @@ class LakeTable(spark: SparkSession, val root: String) {
       estRows = hit.map(_._1.rows).sum + updateRows)
     // merged keys must leave the tombstone set — their fresh rows would
     // otherwise be erased by the read-time anti-join
-    val (tAdds, tRemoves, tombs) =
+    val (tAdds, tRemoves) =
       foldTombstones(m, Some(updates.select(col(keyCol))))
     // rebase envelope: every update key materializes as a row in the new
     // files, and every read row came from a hit file — so adds ∪ hit
     // ranges cover the verb's whole footprint
-    val cv = commitAndIndex(Delta(v + 1, v, operation, keyCol, m.statsCols,
-      m.partitionCols, full = false, adds = newFiles,
+    val cv = commitAndIndex(nextDelta(m, operation).copy(adds = newFiles,
       removes = hit.map(_._1.path), tombstoneAdds = tAdds,
-      tombstoneRemoves = tRemoves, schemaDdl = newSchemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      kept.map(_._1) ++ newFiles, tombs,
+      tombstoneRemoves = tRemoves, schemaDdl = newSchemaDdl),
       rebaseEnvelope = Some(() => rangeEnvelope(newFiles ++ hit.map(_._1))))
     MergeStats(cv, kept.size, hit.size, newFiles.size, updateRows)
   }
@@ -5120,7 +5078,7 @@ class LakeTable(spark: SparkSession, val root: String) {
     // source keys leave the tombstone set: matched-updated and inserted
     // keys get fresh rows; delete-claused and no-insert keys have had
     // their physical rows dropped by the rewrite either way
-    val (tAdds, tRemoves, tombs) =
+    val (tAdds, tRemoves) =
       foldTombstones(m, Some(updates.select(col(lk))))
     // per-column merges never evolve the schema; SET * may widen it
     val commitSchemaDdl =
@@ -5153,13 +5111,9 @@ class LakeTable(spark: SparkSession, val root: String) {
             math.max(if (lo > hi) Long.MinValue else hi, r.getLong(1)))
         }
       })
-    val cv = commitAndIndex(Delta(v + 1, v, operation, keyCol, m.statsCols,
-      m.partitionCols, full = false, adds = newFiles,
+    val cv = commitAndIndex(nextDelta(m, operation).copy(adds = newFiles,
       removes = hit.map(_._1.path), tombstoneAdds = tAdds,
-      tombstoneRemoves = tRemoves,
-      schemaDdl = commitSchemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      kept.map(_._1) ++ newFiles, tombs,
+      tombstoneRemoves = tRemoves, schemaDdl = commitSchemaDdl),
       rebaseEnvelope = envelope)
     MergeStats(cv, kept.size, hit.size, newFiles.size, updateRows)
   }
@@ -5238,21 +5192,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     val newFiles = writeDataFiles(toPhysical(m, withConstraintChecks(m, rewritten, "UPDATE")), keyCol,
       sizedFileCount(hit.size, hit.map(_.rows).sum), m.statsCols,
       partitionCols = m.partitionCols, estRows = hit.map(_.rows).sum)
-    val (tAdds, tRemoves, tombs) = foldTombstones(m, None)
-    commitAndIndex(Delta(v + 1, v, "update", keyCol, m.statsCols,
-      m.partitionCols, full = false, adds = newFiles,
-      removes = hit.map(_.path), tombstoneAdds = tAdds,
-      tombstoneRemoves = tRemoves, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      kept ++ newFiles, tombs)
-    MergeStats(v + 1, kept.size, hit.size, newFiles.size, updateRows)
+    val cv = commitAndIndex(nextDelta(m, "update")
+      .copy(adds = newFiles, removes = hit.map(_.path)))
+    MergeStats(cv, kept.size, hit.size, newFiles.size, updateRows)
   }
-
-  def updateWithRetry(condition: org.apache.spark.sql.Column,
-                      sets: Seq[(String, org.apache.spark.sql.Column)],
-                      maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(update(condition, sets))
 
   /** DELETE … WHERE over an arbitrary predicate — the SQL `DELETE FROM`
     * surface: one tombstone-applied scan derives the matching KEYS, then
@@ -5286,42 +5229,19 @@ class LakeTable(spark: SparkSession, val root: String) {
     val newFiles = writeDataFiles(toPhysical(m, survivors), "",
       sizedFileCount(1, hit.map(_.rows).sum), m.statsCols,
       partitionCols = m.partitionCols, estRows = hit.map(_.rows).sum)
-    val cv = commitAndIndex(Delta(v + 1, v, "delete-where", "",
-      m.statsCols, m.partitionCols, full = false, adds = newFiles,
-      removes = hit.map(_.path), tombstoneAdds = Nil,
-      tombstoneRemoves = Nil, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      kept ++ newFiles, Nil)
+    val cv = commitAndIndex(nextDelta(m, "delete-where")
+      .copy(adds = newFiles, removes = hit.map(_.path)))
     MergeStats(cv, kept.size, hit.size, newFiles.size,
       hit.map(_.rows).sum)
   }
 
-  def deleteWhereWithRetry(condition: org.apache.spark.sql.Column,
-                           maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(deleteWhere(condition))
-
-  def mergeIntoWithRetry(updates: DataFrame,
-                         whenMatchedDeleteIf: Option[org.apache.spark.sql.Column] = None,
-                         whenMatchedUpdateIf: Option[org.apache.spark.sql.Column] = None,
-                         whenNotMatchedInsert: Boolean = true,
-                         maxAttempts: Int = 3,
-                         updateSet: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-                         whenNotMatchedInsertIf: Option[org.apache.spark.sql.Column] = None,
-                         whenNotMatchedBySourceDeleteIf: Option[org.apache.spark.sql.Column] = None,
-                         whenNotMatchedBySourceUpdateIf: Option[org.apache.spark.sql.Column] = None,
-                         whenNotMatchedBySourceUpdateSet: Seq[(String, org.apache.spark.sql.Column)] = Nil)
-      : MergeStats =
-    withRetry(maxAttempts)(mergeInto(updates, whenMatchedDeleteIf,
-      whenMatchedUpdateIf, whenNotMatchedInsert,
-      updateSet = updateSet, whenNotMatchedInsertIf = whenNotMatchedInsertIf,
-      whenNotMatchedBySourceDeleteIf = whenNotMatchedBySourceDeleteIf,
-      whenNotMatchedBySourceUpdateIf = whenNotMatchedBySourceUpdateIf,
-      whenNotMatchedBySourceUpdateSet = whenNotMatchedBySourceUpdateSet))
+  /** Epoch-tagged commits are named `merge-epoch-[appId-]N`; every tag
+    * writer and reader goes through this prefix. */
+  private def epochPrefix(appId: String): String =
+    if (appId.isEmpty) "merge-epoch-" else s"merge-epoch-$appId-"
 
   private def epochTag(epochId: Long, appId: String): String =
-    if (appId.isEmpty) s"merge-epoch-$epochId"
-    else s"merge-epoch-$appId-$epochId"
+    epochPrefix(appId) + epochId
 
   /** True iff a streaming epoch already committed — the manifest chain IS
     * the transaction log (the txnAppId/txnVersion idempotent-sink pattern:
@@ -5338,7 +5258,7 @@ class LakeTable(spark: SparkSession, val root: String) {
     * engine's offset log never replays batches that old.) */
   def hasEpoch(epochId: Long, appId: String = ""): Boolean = {
     val probe = epochTag(epochId, appId)
-    val prefix = if (appId.isEmpty) "merge-epoch-" else s"merge-epoch-$appId-"
+    val prefix = epochPrefix(appId)
     var v = latestVersion
     while (v >= 0) {
       if (hasVersion(v)) {
@@ -5364,7 +5284,7 @@ class LakeTable(spark: SparkSession, val root: String) {
     * log (the MV refresh: "what base version does my state reflect?").
     * O(commits since that epoch); vacuumed manifests skip. */
   def latestEpoch(appId: String): Option[Long] = {
-    val prefix = if (appId.isEmpty) "merge-epoch-" else s"merge-epoch-$appId-"
+    val prefix = epochPrefix(appId)
     var v = latestVersion
     while (v >= 0) {
       if (hasVersion(v)) {
@@ -5381,33 +5301,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     None
   }
 
-  /** The newest epoch-tagged commit (this table's version, its epoch id)
-    * whose epoch id is ≤ `maxEpoch` — the [[latestEpoch]] walk with an
-    * upper bound. (The MV `VERSION AS OF` read used to resolve here;
-    * since r18 it brackets through [[firstVersionAboveEpoch]] instead so
-    * dim-only refreshes — untagged on the fact chain — are included.)
-    * Same retained-chain caveat as [[latestEpoch]]: a vacuumed
-    * stretch ends the walk at the newest surviving tags. */
-  def versionAtEpoch(appId: String, maxEpoch: Long): Option[(Int, Long)] = {
-    val prefix = if (appId.isEmpty) "merge-epoch-" else s"merge-epoch-$appId-"
-    var v = latestVersion
-    while (v >= 0) {
-      if (hasVersion(v)) {
-        val op = readDelta(v).operation
-        if (op.startsWith(prefix)) {
-          val id = op.stripPrefix(prefix).toLongOption
-          id.filter(_ <= maxEpoch).foreach(e => return Some((v, e)))
-        }
-      }
-      v -= 1
-    }
-    None
-  }
-
   /** Version `v`'s epoch tag on chain `appId`, if that commit carries
     * one (None for untagged commits and for other chains' tags). */
   def epochTagAt(v: Int, appId: String): Option[Long] = {
-    val prefix = if (appId.isEmpty) "merge-epoch-" else s"merge-epoch-$appId-"
+    val prefix = epochPrefix(appId)
     val op = readDelta(v).operation
     if (op.startsWith(prefix)) op.stripPrefix(prefix).toLongOption else None
   }
@@ -5571,19 +5468,10 @@ class LakeTable(spark: SparkSession, val root: String) {
       partitionCols = m.partitionCols, estRows = nRows)
     // inserted keys were proven ABSENT (live and tombstoned): the
     // tombstone set carries unchanged
-    val (tAdds, tRemoves, tombs) = foldTombstones(m, None)
-    val cv = commitAndIndex(Delta(v + 1, v, operation, keyCol, m.statsCols,
-      m.partitionCols, full = false, adds = newFiles, removes = Nil,
-      tombstoneAdds = tAdds, tombstoneRemoves = tRemoves,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      m.files ++ newFiles, tombs,
+    val cv = commitAndIndex(nextDelta(m, operation).copy(adds = newFiles),
       rebaseEnvelope = Some(() => rangeEnvelope(newFiles)))
     MergeStats(cv, m.files.size, 0, newFiles.size, nRows)
   }
-
-  def insertAllWithRetry(rows: DataFrame, maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(insertAll(rows))
 
   /** [[insertAll]] tagged with a streaming epoch — the append-path twin
     * of [[mergeEpoch]], same at-most-once contract per (appId, epoch).
@@ -5634,9 +5522,8 @@ class LakeTable(spark: SparkSession, val root: String) {
           partitionCols = m.partitionCols,
           estRows = hit.map(_._1.rows).sum)
       }
-    // a pure delete re-introduces nothing: tombstones carry unchanged
-    val (tAdds, tRemoves, tombs) = foldTombstones(m, None)
-    // the rebase envelope must cover the PROBE KEYS, not just touched
+    // a pure delete re-introduces nothing: tombstones carry unchanged.
+    // The rebase envelope must cover the PROBE KEYS, not just touched
     // files: a delete key that hit nothing is a no-op NOW, but a winner
     // concurrently inserting that key must force a replay (serialize-
     // after semantics would delete it). Predicate-derived deletes
@@ -5661,13 +5548,8 @@ class LakeTable(spark: SparkSession, val root: String) {
               math.max(kHi, if (hLo > hHi) Long.MinValue else hHi))
         }
       })
-    val cv = commitAndIndex(Delta(v + 1, v, "delete", keyCol, m.statsCols,
-      m.partitionCols, full = false, adds = newFiles,
-      removes = hit.map(_._1.path), tombstoneAdds = tAdds,
-      tombstoneRemoves = tRemoves, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      kept.map(_._1) ++ newFiles, tombs,
+    val cv = commitAndIndex(nextDelta(m, "delete")
+      .copy(adds = newFiles, removes = hit.map(_._1.path)),
       rebaseEnvelope = envelope)
     MergeStats(cv, kept.size, hit.size, newFiles.size, 0L)
   }
@@ -5693,18 +5575,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     val tomb = writeDataFiles(
       keys.select(col(keys.columns.head).as(m.keyCol)).distinct(),
       m.keyCol, 1)
-    commitAndIndex(Delta(v + 1, v, "delete-deferred", m.keyCol, m.statsCols,
-      m.partitionCols, full = false, adds = Nil, removes = Nil,
-      tombstoneAdds = tomb, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      m.files, m.tombstones ++ tomb)
-    MergeStats(v + 1, m.files.size, 0, tomb.size, 0L)
+    val cv = commitAndIndex(
+      nextDelta(m, "delete-deferred").copy(tombstoneAdds = tomb))
+    MergeStats(cv, m.files.size, 0, tomb.size, 0L)
   }
-
-  def deleteDeferredWhereWithRetry(condition: org.apache.spark.sql.Column,
-                                   maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(deleteDeferredWhere(condition))
 
   /** MERGE-ON-READ delete by ARBITRARY PREDICATE — [[deleteWhere]]'s
     * write-cheap twin, completing the matrix (by-key/by-predicate ×
@@ -5736,13 +5610,9 @@ class LakeTable(spark: SparkSession, val root: String) {
     val keys = read().filter(condition).select(col(keyLogical).as(m.keyCol))
     val tomb = writeDataFiles(keys, m.keyCol, 1)
     if (tomb.isEmpty) return MergeStats(v, m.files.size, 0, 0, 0L)
-    commitAndIndex(Delta(v + 1, v, "delete-deferred-where", m.keyCol,
-      m.statsCols, m.partitionCols, full = false, adds = Nil, removes = Nil,
-      tombstoneAdds = tomb, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      m.files, m.tombstones ++ tomb)
-    MergeStats(v + 1, m.files.size, 0, tomb.size, 0L)
+    val cv = commitAndIndex(
+      nextDelta(m, "delete-deferred-where").copy(tombstoneAdds = tomb))
+    MergeStats(cv, m.files.size, 0, tomb.size, 0L)
   }
 
   /** ALTER TABLE … RENAME COLUMN — METADATA-ONLY, via column mapping:
@@ -5780,18 +5650,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     val newMap = (m.columnMap - canonical) ++
       (if (newName == physical) Map.empty[String, String]
        else Map(newName -> physical))
-    commitAndIndex(Delta(v + 1, v, s"rename-$canonical-to-$newName",
-      m.keyCol, m.statsCols, m.partitionCols, full = false, adds = Nil,
-      removes = Nil, tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = newMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      m.files, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"rename-$canonical-to-$newName")
+      .copy(columnMap = newMap))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
-
-  def renameColumnWithRetry(oldName: String, newName: String,
-                            maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(renameColumn(oldName, newName))
 
   /** ALTER TABLE … DROP COLUMN — METADATA-ONLY: the field leaves the
     * recorded read schema (and the stats set), so no snapshot from this
@@ -5823,23 +5685,17 @@ class LakeTable(spark: SparkSession, val root: String) {
       "cannot drop a partition column — repartitioning is a rewrite")
     val newFields = physSchema.fields.filterNot(_.name == physical)
     require(newFields.nonEmpty, "cannot drop the last column")
-    commitAndIndex(Delta(v + 1, v, s"drop-$canonical", m.keyCol,
-      m.statsCols.filterNot(_ == physical), m.partitionCols, full = false,
-      adds = Nil, removes = Nil, tombstoneAdds = Nil, tombstoneRemoves = Nil,
+    val cv = commitAndIndex(nextDelta(m, s"drop-$canonical").copy(
+      statsCols = m.statsCols.filterNot(_ == physical),
       schemaDdl = Some(org.apache.spark.sql.types.StructType(newFields).toDDL),
       columnMap = m.columnMap - canonical,
-      constraints = m.constraints,
       // the dropped PHYSICAL name is reserved from here on: carried
       // files still hold its bytes, and a re-added column of the same
       // name must never read them (it gets a fresh physical name via
       // remapReAdded instead — the silent-resurrection guard)
-      droppedCols = (m.droppedCols :+ physical).distinct),
-      m.files, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+      droppedCols = (m.droppedCols :+ physical).distinct))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
-
-  def dropColumnWithRetry(name: String, maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(dropColumn(name))
 
   /** ALTER TABLE … ADD COLUMN — METADATA-ONLY commit: the new NULLABLE
     * column joins the recorded read schema (inserted before the
@@ -5880,18 +5736,10 @@ class LakeTable(spark: SparkSession, val root: String) {
       m.partitionCols.exists(_.equalsIgnoreCase(f.name)))
     val newSchema = org.apache.spark.sql.types.StructType(
       (dFields :+ newField) ++ pFields)
-    commitAndIndex(Delta(v + 1, v, s"add-column-$name", m.keyCol,
-      m.statsCols, m.partitionCols, full = false, adds = Nil,
-      removes = Nil, tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = Some(newSchema.toDDL), columnMap = m2.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      m.files, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"add-column-$name")
+      .copy(schemaDdl = Some(newSchema.toDDL), columnMap = m2.columnMap))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
-
-  def addColumnWithRetry(name: String, typeDdl: String,
-                         maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(addColumn(name, typeDdl))
 
   /** ALTER TABLE … ALTER COLUMN <c> TYPE <t> — METADATA-ONLY widening:
     * the recorded read schema promotes the column through exactly the
@@ -5925,20 +5773,10 @@ class LakeTable(spark: SparkSession, val root: String) {
       "cannot alter the merge key's type (manifest key ranges are typed)")
     val newFields = physSchema.fields.map(f =>
       if (f.name == field.name) f.copy(dataType = newType) else f)
-    commitAndIndex(Delta(v + 1, v, s"alter-column-$name", m.keyCol,
-      m.statsCols, m.partitionCols, full = false, adds = Nil,
-      removes = Nil, tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = Some(org.apache.spark.sql.types
-        .StructType(newFields).toDDL),
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      m.files, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"alter-column-$name").copy(
+      schemaDdl = Some(org.apache.spark.sql.types.StructType(newFields).toDDL)))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
-
-  def alterColumnTypeWithRetry(name: String, typeDdl: String,
-                               maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(alterColumnType(name, typeDdl))
 
   /** ALTER TABLE … PARTITIONED BY (…) — METADATA-ONLY partition-spec
     * evolution (the Iceberg idea): the commit records a new layout spec
@@ -5975,19 +5813,11 @@ class LakeTable(spark: SparkSession, val root: String) {
     if (phys == m.partitionCols) return MergeStats(v, m.files.size, 0, 0, 0L)
     // outgoing partition columns keep their per-file stats coverage by
     // joining the declared stats set — old files prune on them forever
-    val stats2 = (m.statsCols ++ m.partitionCols).distinct
-    commitAndIndex(Delta(v + 1, v, "alter-partitioning", m.keyCol,
-      stats2, phys, full = false, adds = Nil,
-      removes = Nil, tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      m.files, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+    val cv = commitAndIndex(nextDelta(m, "alter-partitioning").copy(
+      statsCols = (m.statsCols ++ m.partitionCols).distinct,
+      partitionCols = phys))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
-
-  def alterPartitioningWithRetry(cols: Seq[String],
-                                 maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(alterPartitioning(cols))
 
   /** OPTIMIZE … MIGRATE — fold pre-evolution LAYOUT ERAS into the
     * current partition spec: only files whose directory signature
@@ -6012,21 +5842,11 @@ class LakeTable(spark: SparkSession, val root: String) {
       packed0.join(tk, Seq(m.keyCol), "left_anti"))
     val newFiles = writeDataFiles(packed, m.keyCol, numOut, m.statsCols,
       partitionCols = m.partitionCols)
-    val (tAdds, tRemoves, tombs) = foldTombstones(m, None)
-    val cv = commitAndIndex(Delta(v + 1, v, "optimize-migrate", m.keyCol,
-      m.statsCols, m.partitionCols, full = false, adds = newFiles,
-      removes = hit.map(_.path), tombstoneAdds = tAdds,
-      tombstoneRemoves = tRemoves, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      kept ++ newFiles, tombs,
+    val cv = commitAndIndex(nextDelta(m, "optimize-migrate")
+      .copy(adds = newFiles, removes = hit.map(_.path)),
       rebaseEnvelope = Some(() => rangeEnvelope(hit ++ newFiles)))
     MergeStats(cv, kept.size, hit.size, newFiles.size, hitRows)
   }
-
-  def compactMigrateWithRetry(numFiles: Int = 0,
-                              maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(compactMigrate(numFiles))
 
   /** RESTORE — roll the table back to `version`'s content AS A NEW
     * COMMIT (never by deleting history): the new manifest re-references
@@ -6040,13 +5860,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     val v = latestVersion
     require(hasVersion(version), s"cannot restore: v$version was vacuumed")
     val m = manifest(version)
-    commitAndIndex(Delta(v + 1, v, s"restore-v$version", m.keyCol,
-      m.statsCols, m.partitionCols, full = true, adds = m.files,
-      removes = Nil, tombstoneAdds = m.tombstones, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      m.files, m.tombstones)
-    MergeStats(v + 1, m.files.size, 0, 0, 0L)
+    // the restored version's full state and metadata, on the latest parent
+    val cv = commitAndIndex(fullDelta(m).copy(version = v + 1,
+      parentVersion = v, operation = s"restore-v$version"))
+    MergeStats(cv, m.files.size, 0, 0, 0L)
   }
 
   /** Shallow CLONE — a new, independently-committing table whose v0
@@ -6071,13 +5888,9 @@ class LakeTable(spark: SparkSession, val root: String) {
     def absolute(fs0: Seq[FileEntry]): Seq[FileEntry] = fs0.map(f =>
       f.copy(path = new Path(rootPath, f.path).toString))
     val t = new LakeTable(spark, newRoot)
-    t.commitAndIndex(Delta(0, -1, s"clone-of-$rootPath@v$v",
-      m.keyCol, m.statsCols, Nil, full = true, adds = absolute(m.files),
-      removes = Nil, tombstoneAdds = absolute(m.tombstones),
-      tombstoneRemoves = Nil, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      absolute(m.files), absolute(m.tombstones))
+    t.commitAndIndex(fullDelta(m).copy(version = 0, parentVersion = -1,
+      operation = s"clone-of-$rootPath@v$v", adds = absolute(m.files),
+      tombstoneAdds = absolute(m.tombstones)))
     t
   }
 
@@ -6093,12 +5906,9 @@ class LakeTable(spark: SparkSession, val root: String) {
     val newFiles = writeDataFiles(snapshotPhysical(v), m.keyCol, numFiles,
       m.statsCols, partitionCols = m.partitionCols,
       estRows = m.files.map(_.rows).sum)
-    commitAndIndex(Delta(v + 1, v, "compact", m.keyCol, m.statsCols,
-      m.partitionCols, full = true, adds = newFiles, removes = Nil,
-      tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols), newFiles, Nil)
-    MergeStats(v + 1, 0, m.files.size, newFiles.size, 0L)
+    val cv = commitAndIndex(
+      nextDelta(m, "compact").copy(full = true, adds = newFiles))
+    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
   }
 
   /** OPTIMIZE BINPACK — the INCREMENTAL compaction a 100 TB table
@@ -6138,22 +5948,11 @@ class LakeTable(spark: SparkSession, val root: String) {
       packed0.join(tk, Seq(m.keyCol), "left_anti"))
     val newFiles = writeDataFiles(packed, m.keyCol, numOut, m.statsCols,
       partitionCols = m.partitionCols)
-    val (tAdds, tRemoves, tombs) = foldTombstones(m, None)
-    val cv = commitAndIndex(Delta(v + 1, v, "optimize-binpack", m.keyCol,
-      m.statsCols, m.partitionCols, full = false, adds = newFiles,
-      removes = rewrite.map(_.path), tombstoneAdds = tAdds,
-      tombstoneRemoves = tRemoves, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      carried ++ newFiles, tombs,
+    val cv = commitAndIndex(nextDelta(m, "optimize-binpack")
+      .copy(adds = newFiles, removes = rewrite.map(_.path)),
       rebaseEnvelope = Some(() => rangeEnvelope(rewrite ++ newFiles)))
     MergeStats(cv, carried.size, rewrite.size, newFiles.size, rewriteRows)
   }
-
-  def compactBinPackWithRetry(minRows: Long, targetRows: Long = 0L,
-                              maxRows: Long = 0L,
-                              maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(compactBinPack(minRows, targetRows, maxRows))
 
   /** OPTIMIZE … WHERE — PREDICATE-SCOPED compaction (Delta's
     * `OPTIMIZE t WHERE partition-predicate`): only files whose rows can
@@ -6212,23 +6011,11 @@ class LakeTable(spark: SparkSession, val root: String) {
     val op = layout.fold("optimize-where")(l => s"optimize-where-${l._1}")
     val newFiles = writeDataFiles(packed, m.keyCol, numOut, statsCols,
       cluster, partitionCols = m.partitionCols)
-    val (tAdds, tRemoves, tombs) = foldTombstones(m, None)
-    val cv = commitAndIndex(Delta(v + 1, v, op, m.keyCol,
-      statsCols, m.partitionCols, full = false, adds = newFiles,
-      removes = hit.map(_.path), tombstoneAdds = tAdds,
-      tombstoneRemoves = tRemoves, schemaDdl = m.schemaDdl,
-      columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      kept ++ newFiles, tombs,
+    val cv = commitAndIndex(nextDelta(m, op).copy(statsCols = statsCols,
+      adds = newFiles, removes = hit.map(_.path)),
       rebaseEnvelope = Some(() => rangeEnvelope(hit ++ newFiles)))
     MergeStats(cv, kept.size, hit.size, newFiles.size, hitRows)
   }
-
-  def compactWhereWithRetry(condition: org.apache.spark.sql.Column,
-                            numFiles: Int = 0,
-                            layout: Option[(String, Seq[String])] = None,
-                            maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(compactWhere(condition, numFiles, layout))
 
   /** OPTIMIZE SORT BY — rewrite the latest snapshot range-clustered on an
     * arbitrary column list (the Delta `OPTIMIZE ... ZORDER`'s simpler
@@ -6250,18 +6037,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     // hive-partitioned tables re-cluster WITHIN each partition directory
     val newFiles = writeDataFiles(snapshotPhysical(v), m.keyCol, numFiles,
       statsCols, Some(cluster), partitionCols = m.partitionCols)
-    commitAndIndex(Delta(v + 1, v, s"optimize-sortby-${physCols.mkString("-")}",
-      m.keyCol, statsCols, m.partitionCols, full = true, adds = newFiles,
-      removes = Nil, tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      newFiles, Nil)
-    MergeStats(v + 1, 0, m.files.size, newFiles.size, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"optimize-sortby-${physCols.mkString("-")}")
+      .copy(statsCols = statsCols, full = true, adds = newFiles))
+    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
   }
-
-  def compactSortByWithRetry(numFiles: Int, sortCols: Seq[String],
-                             maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(compactSortBy(numFiles, sortCols: _*))
 
   /** OPTIMIZE ZORDER — rewrite the latest snapshot clustered on the
     * Morton z-value of two numeric columns (the Delta `OPTIMIZE ... ZORDER
@@ -6297,12 +6076,9 @@ class LakeTable(spark: SparkSession, val root: String) {
     // hive-partitioned tables z-cluster WITHIN each partition directory
     val newFiles = writeDataFiles(snap, m.keyCol, numFiles, statsCols,
       Some(z), partitionCols = m.partitionCols)
-    commitAndIndex(Delta(v + 1, v, "optimize-zorder", m.keyCol, statsCols,
-      m.partitionCols, full = true, adds = newFiles, removes = Nil,
-      tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols), newFiles, Nil)
-    MergeStats(v + 1, 0, m.files.size, newFiles.size, 0L)
+    val cv = commitAndIndex(nextDelta(m, "optimize-zorder")
+      .copy(statsCols = statsCols, full = true, adds = newFiles))
+    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
   }
 
   /** OPTIMIZE ZORDER over n ≥ 2 columns — [[compactZOrder]] generalized
@@ -6324,18 +6100,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     // hive-partitioned tables z-cluster WITHIN each partition directory
     val newFiles = writeDataFiles(snap, m.keyCol, numFiles, statsCols,
       Some(z), partitionCols = m.partitionCols)
-    commitAndIndex(Delta(v + 1, v, s"optimize-zorder-${cols.size}d",
-      m.keyCol, statsCols, m.partitionCols, full = true, adds = newFiles,
-      removes = Nil, tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      newFiles, Nil)
-    MergeStats(v + 1, 0, m.files.size, newFiles.size, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"optimize-zorder-${cols.size}d")
+      .copy(statsCols = statsCols, full = true, adds = newFiles))
+    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
   }
-
-  def compactZOrderNWithRetry(numFiles: Int, cols: Seq[String],
-                              maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(compactZOrderN(numFiles, cols))
 
   /** OPTIMIZE HILBERT — [[compactZOrderN]]'s locality-preserving sibling:
     * rewrite the latest snapshot clustered on the n-D HILBERT index
@@ -6357,18 +6125,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     // hive-partitioned tables cluster WITHIN each partition directory
     val newFiles = writeDataFiles(snap, m.keyCol, numFiles, statsCols,
       Some(h), partitionCols = m.partitionCols)
-    commitAndIndex(Delta(v + 1, v, s"optimize-hilbert-${cols.size}d",
-      m.keyCol, statsCols, m.partitionCols, full = true, adds = newFiles,
-      removes = Nil, tombstoneAdds = Nil, tombstoneRemoves = Nil,
-      schemaDdl = m.schemaDdl, columnMap = m.columnMap,
-      constraints = m.constraints, droppedCols = m.droppedCols),
-      newFiles, Nil)
-    MergeStats(v + 1, 0, m.files.size, newFiles.size, 0L)
+    val cv = commitAndIndex(nextDelta(m, s"optimize-hilbert-${cols.size}d")
+      .copy(statsCols = statsCols, full = true, adds = newFiles))
+    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
   }
-
-  def compactHilbertWithRetry(numFiles: Int, cols: Seq[String],
-                              maxAttempts: Int = 3): MergeStats =
-    withRetry(maxAttempts)(compactHilbert(numFiles, cols))
 
   /** Retention vacuum: drop all but the newest `retainVersions` manifests
     * and physically delete every data file referenced ONLY by the dropped

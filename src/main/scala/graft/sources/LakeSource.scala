@@ -299,7 +299,7 @@ private[sources] class LakeMergeSink(root: String, appId: String,
         .get("spark.graft.lake.autoBinpack.minFiles", "4").toInt
       val m = t.manifest(t.latestVersion)
       if (m.files.count(_.rows < minRows) >= minFiles)
-        t.compactBinPackWithRetry(minRows)
+        t.withRetry(t.compactBinPack(minRows))
     }
     ()
   }

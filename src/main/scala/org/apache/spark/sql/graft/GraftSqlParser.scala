@@ -1633,7 +1633,8 @@ case class LakeMergeCommand(root: String, sourceSql: String, keyName: String,
     val nmbsU =
       if (!nmbsUpdate) None
       else Some(nmbsUpdateCondSql.map(exprCol).getOrElse(lit(true)))
-    GraftSqlParser.statsRow(t.mergeIntoWithRetry(spark.sql(sourceSql),
+    val source = spark.sql(sourceSql)
+    GraftSqlParser.statsRow(t.withRetry(t.mergeInto(source,
       whenMatchedDeleteIf = Some(del), whenMatchedUpdateIf = Some(upd),
       whenNotMatchedInsert = insert,
       updateSet = updateSetSql.map { case (c, e) => c -> exprCol(e) },
@@ -1641,7 +1642,7 @@ case class LakeMergeCommand(root: String, sourceSql: String, keyName: String,
       whenNotMatchedBySourceDeleteIf = nmbs,
       whenNotMatchedBySourceUpdateIf = nmbsU,
       whenNotMatchedBySourceUpdateSet =
-        nmbsUpdateSetSql.map { case (c, e) => c -> exprCol(e) }))
+        nmbsUpdateSetSql.map { case (c, e) => c -> exprCol(e) })))
   }
 }
 
@@ -2069,7 +2070,8 @@ case class LakeInsertCommand(root: String,
   override val output: Seq[Attribute] = GraftSqlParser.statsOutput
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new graft.sources.LakeTable(spark, root)
-    GraftSqlParser.statsRow(t.insertAllWithRetry(spark.sql(sourceSql)))
+    val rows = spark.sql(sourceSql)
+    GraftSqlParser.statsRow(t.withRetry(t.insertAll(rows)))
   }
 }
 
@@ -2080,9 +2082,9 @@ case class LakeUpdateCommand(root: String, sets: Seq[(String, String)],
   override def run(spark: SparkSession): Seq[Row] = {
     import GraftSqlParser.exprCol
     val t = new graft.sources.LakeTable(spark, root)
-    GraftSqlParser.statsRow(t.updateWithRetry(
+    GraftSqlParser.statsRow(t.withRetry(t.update(
       whereSql.map(exprCol).getOrElse(lit(true)),
-      sets.map { case (c, e) => c -> exprCol(e) }))
+      sets.map { case (c, e) => c -> exprCol(e) })))
   }
 }
 
@@ -2098,9 +2100,9 @@ case class LakeDeleteCommand(root: String,
     val t = new graft.sources.LakeTable(spark, root)
     GraftSqlParser.statsRow(
       if (deferred)
-        t.deleteDeferredWhereWithRetry(exprCol(whereSql.get))
+        t.withRetry(t.deleteDeferredWhere(exprCol(whereSql.get)))
       else
-        t.deleteWhereWithRetry(whereSql.map(exprCol).getOrElse(lit(true))))
+        t.withRetry(t.deleteWhere(whereSql.map(exprCol).getOrElse(lit(true)))))
   }
 }
 
@@ -2115,15 +2117,15 @@ case class LakeOptimizeCommand(root: String, files: Option[Int],
     val t = new graft.sources.LakeTable(spark, root)
     val n = files.getOrElse(
       math.max(1, t.manifest(t.latestVersion).files.size))
-    val stats = layout match {
-      case None => t.compactWithRetry(n)
-      case Some(("sort", cols)) => t.compactSortByWithRetry(n, cols)
-      case Some(("zorder", Seq(c1, c2))) => t.compactZOrderWithRetry(n, c1, c2)
-      case Some(("zorder", cols)) => t.compactZOrderNWithRetry(n, cols)
-      case Some(("hilbert", cols)) => t.compactHilbertWithRetry(n, cols)
+    val stats = t.withRetry(layout match {
+      case None => t.compact(n)
+      case Some(("sort", cols)) => t.compactSortBy(n, cols: _*)
+      case Some(("zorder", Seq(c1, c2))) => t.compactZOrder(n, c1, c2)
+      case Some(("zorder", cols)) => t.compactZOrderN(n, cols)
+      case Some(("hilbert", cols)) => t.compactHilbert(n, cols)
       case Some((other, _)) =>
         throw new IllegalStateException(s"unknown layout $other")
-    }
+    })
     GraftSqlParser.statsRow(stats)
   }
 }
@@ -2140,7 +2142,7 @@ case class LakeOptimizeWhereCommand(root: String, files: Int,
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new graft.sources.LakeTable(spark, root)
     GraftSqlParser.statsRow(
-      t.compactWhereWithRetry(GraftSqlParser.exprCol(whereSql), files, layout))
+      t.withRetry(t.compactWhere(GraftSqlParser.exprCol(whereSql), files, layout)))
   }
 }
 
@@ -2156,8 +2158,8 @@ case class LakeBinPackCommand(root: String, minRows: Int,
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new graft.sources.LakeTable(spark, root)
     GraftSqlParser.statsRow(
-      t.compactBinPackWithRetry(minRows.toLong, targetRows.toLong,
-        splitRows.toLong))
+      t.withRetry(t.compactBinPack(minRows.toLong, targetRows.toLong,
+        splitRows.toLong)))
   }
 }
 
@@ -2172,15 +2174,15 @@ case class LakeAlterCommand(root: String, verb: String, column: String,
   override val output: Seq[Attribute] = GraftSqlParser.statsOutput
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new graft.sources.LakeTable(spark, root)
-    GraftSqlParser.statsRow(verb match {
-      case "rename" => t.renameColumnWithRetry(column, to.get)
-      case "add" => t.addColumnWithRetry(column, to.get)
-      case "alter-type" => t.alterColumnTypeWithRetry(column, to.get)
-      case "drop" => t.dropColumnWithRetry(column)
-      case "add-constraint" => t.addConstraintWithRetry(column, to.get)
-      case "drop-constraint" => t.dropConstraintWithRetry(column)
+    GraftSqlParser.statsRow(t.withRetry(verb match {
+      case "rename" => t.renameColumn(column, to.get)
+      case "add" => t.addColumn(column, to.get)
+      case "alter-type" => t.alterColumnType(column, to.get)
+      case "drop" => t.dropColumn(column)
+      case "add-constraint" => t.addConstraint(column, to.get)
+      case "drop-constraint" => t.dropConstraint(column)
       case other => throw new IllegalStateException(s"unknown alter $other")
-    })
+    }))
   }
 }
 
@@ -2192,7 +2194,7 @@ case class LakeMigrateCommand(root: String, files: Int)
   override val output: Seq[Attribute] = GraftSqlParser.statsOutput
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new graft.sources.LakeTable(spark, root)
-    GraftSqlParser.statsRow(t.compactMigrateWithRetry(files))
+    GraftSqlParser.statsRow(t.withRetry(t.compactMigrate(files)))
   }
 }
 
@@ -2206,7 +2208,7 @@ case class LakeAlterPartitioningCommand(root: String, cols: Seq[String])
   override val output: Seq[Attribute] = GraftSqlParser.statsOutput
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new graft.sources.LakeTable(spark, root)
-    GraftSqlParser.statsRow(t.alterPartitioningWithRetry(cols))
+    GraftSqlParser.statsRow(t.withRetry(t.alterPartitioning(cols)))
   }
 }
 
@@ -2223,7 +2225,7 @@ case class LakeAnalyzeCommand(root: String, cols: Seq[String],
     import GraftSqlParser.exprCol
     val t = new graft.sources.LakeTable(spark, root)
     GraftSqlParser.statsRow(
-      t.analyzeColumnsWithRetry(cols, where = whereSql.map(exprCol)))
+      t.withRetry(t.analyzeColumns(cols, whereSql.map(exprCol))))
   }
 }
 
@@ -2275,7 +2277,7 @@ case class LakeRestoreCommand(root: String, version: Option[Int],
     val t = new graft.sources.LakeTable(spark, root)
     val v = version.getOrElse(
       t.versionAt(graft.sources.Lake.parseTsMillis(timestamp.get)))
-    GraftSqlParser.statsRow(t.restoreWithRetry(v))
+    GraftSqlParser.statsRow(t.withRetry(t.restore(v)))
   }
 }
 

@@ -21,6 +21,16 @@ class LakeDeltaSpec extends SparkTestBase {
     fsOf(t).getFileStatus(
       new Path(t.root, f"_manifests/v$v%05d.json")).getLen
 
+  /** The state the latest commit indexed (warm) must equal what a cold
+    * reader resolves from the manifests alone: files in order,
+    * tombstones and every carried field. */
+  private def assertWarmIsCold(t: graft.sources.LakeTable, clue: String): Unit = {
+    val v = t.latestVersion
+    val warm = t.manifest(v)
+    Lake.clearMetadataCaches()
+    withClue(s"$clue, v$v warm vs cold: ") { t.manifest(v) shouldBe warm }
+  }
+
   test("a 1-file merge against a 512-file table commits O(changed) bytes") {
     // 2048 rows over 512 real key-range files — the fixture the payload
     // contract is stated against: a single-key merge rewrites ONE file,
@@ -53,12 +63,11 @@ class LakeDeltaSpec extends SparkTestBase {
         i * 1000L, i * 1000L + 999L))
     t.commitAndIndex(Lake.Delta(0, -1, "create", "k", Nil, Nil, full = true,
       adds = entries, removes = Nil, tombstoneAdds = Nil,
-      tombstoneRemoves = Nil), entries, Nil)
+      tombstoneRemoves = Nil))
     val add = Lake.FileEntry("data/part-synth-new.parquet", 1000L, 0L, 999L)
     t.commitAndIndex(Lake.Delta(1, 0, "merge", "k", Nil, Nil, full = false,
       adds = Seq(add), removes = Seq(entries.head.path),
-      tombstoneAdds = Nil, tombstoneRemoves = Nil),
-      entries.tail :+ add, Nil)
+      tombstoneAdds = Nil, tombstoneRemoves = Nil))
     manifestBytes(t, 1) should be < 1024L
     manifestBytes(t, 0) should be > (100L * 1024L)
     // cold resolution (caches dropped) reconstructs all 10k entries with
@@ -249,7 +258,7 @@ class LakeDeltaSpec extends SparkTestBase {
   test("every committing verb replays a lost race: retry parity") {
     // the onBeforeCommit seam plants a racing carry-over commit exactly
     // once, in the window between a verb's version choice and its rename —
-    // each *WithRetry verb must lose v+1, replay against the winner, and
+    // each verb under withRetry must lose v+1, replay against the winner, and
     // land v+2 with its own semantics intact
     def mkTable() = {
       val df = (1L to 90L).map(k => (k, s"val$k")).toDF("k", "payload")
@@ -272,21 +281,21 @@ class LakeDeltaSpec extends SparkTestBase {
 
     locally { // DELETE
       val t = mkTable(); plantOnce(t)
-      val s = t.deleteWithRetry(Seq(5L, 45L).toDF("k"))
+      val s = t.withRetry(t.delete(Seq(5L, 45L).toDF("k")))
       s.version shouldBe 2
       t.read().count() shouldBe 88L
       t.read().filter(col("k").isin(5L, 45L)).count() shouldBe 0L
     }
     locally { // DEFERRED DELETE
       val t = mkTable(); plantOnce(t)
-      val s = t.deleteDeferredWithRetry(Seq(5L).toDF("k"))
+      val s = t.withRetry(t.deleteDeferred(Seq(5L).toDF("k")))
       s.version shouldBe 2
       t.manifest(2).tombstones should have size 1
       t.read().count() shouldBe 89L
     }
     locally { // COMPACT
       val t = mkTable(); plantOnce(t)
-      val s = t.compactWithRetry(1)
+      val s = t.withRetry(t.compact(1))
       s.version shouldBe 2
       t.manifest(2).operation shouldBe "compact"
       t.manifest(2).files should have size 1
@@ -294,7 +303,7 @@ class LakeDeltaSpec extends SparkTestBase {
     }
     locally { // OPTIMIZE ZORDER
       val t = mkTable(); plantOnce(t)
-      val s = t.compactZOrderWithRetry(2, "k", "k")
+      val s = t.withRetry(t.compactZOrder(2, "k", "k"))
       s.version shouldBe 2
       t.manifest(2).operation shouldBe "optimize-zorder"
       t.read().count() shouldBe 90L
@@ -303,13 +312,80 @@ class LakeDeltaSpec extends SparkTestBase {
       val t = mkTable()
       t.merge(Seq((5L, "BAD")).toDF("k", "payload")) // v1
       plantOnce(t)
-      val s = t.restoreWithRetry(0)
+      val s = t.withRetry(t.restore(0))
       s.version shouldBe 3 // lost v2 to the racer, replayed to v3
       rows(t.read().filter(col("k") === 5L)) shouldBe Seq(Seq(5L, "val5"))
     }
-    locally { // exhausted retries still fail loudly
-      val t = mkTable()
+    // the verbs the property interleaves never draw lose the same race;
+    // the racer here carries the full table metadata (schema, constraints),
+    // so schema verbs replay against it too. Each must land v+2 and index
+    // exactly the state a cold reader resolves
+    def wideTable() = Lake.create(spark, Lake.freshRoot(),
+      (1L to 90L).map(k => (k, s"val$k", (k % 7).toInt, if (k % 2 == 0) "A" else "B"))
+        .toDF("k", "payload", "n", "status"), "k", 3)
+    def plantMetadataRacer(t: graft.sources.LakeTable): Unit = {
+      val racer = new graft.sources.LakeTable(spark, t.root)
+      var raced = false
       t.onBeforeCommit = () => {
+        if (!raced) {
+          raced = true
+          val v = t.latestVersion + 1
+          racer.commitDelta(Lake.fullDelta(t.manifest(v - 1))
+            .copy(version = v, parentVersion = v - 1, operation = "racer"))
+        }
+      }
+    }
+    val verbs: Seq[(String, graft.sources.LakeTable => Unit,
+        graft.sources.LakeTable => Lake.MergeStats)] = Seq(
+      ("restore", _.merge(Seq((5L, "BAD", 0, "A")).toDF("k", "payload", "n", "status")),
+        t => t.withRetry(t.restore(0))),
+      ("drop column", _ => (), t => t.withRetry(t.dropColumn("payload"))),
+      ("alter column type", _ => (),
+        t => t.withRetry(t.alterColumnType("n", "bigint"))),
+      ("add constraint", _ => (),
+        t => t.withRetry(t.addConstraint("n_pos", "n >= 0"))),
+      ("drop constraint", _.addConstraint("n_pos", "n >= 0"),
+        t => t.withRetry(t.dropConstraint("n_pos"))),
+      ("analyze", _ => (), t => t.withRetry(t.analyzeColumns(Seq("n", "status")))),
+      ("sort by", _ => (), t => t.withRetry(t.compactSortBy(2, "status", "n"))),
+      ("zorder", _ => (), t => t.withRetry(t.compactZOrder(2, "k", "n"))),
+      ("zorder n", _ => (),
+        t => t.withRetry(t.compactZOrderN(2, Seq("k", "n", "status")))),
+      ("hilbert", _ => (), t => t.withRetry(t.compactHilbert(2, Seq("k", "n")))),
+      ("optimize migrate", _.alterPartitioning(Seq("status")),
+        t => t.withRetry(t.compactMigrate())),
+      ("delete where", _.deleteDeferred(Seq(7L).toDF("k")),
+        t => t.withRetry(t.deleteWhere(col("n") === 3))))
+    verbs.foreach { case (name, prep, verb) =>
+      val t = wideTable()
+      prep(t)
+      val v0 = t.latestVersion
+      plantMetadataRacer(t)
+      withClue(s"$name: ") { verb(t).version shouldBe v0 + 2 }
+      t.onBeforeCommit = () => ()
+      t.read().count() should be > 0L
+      assertWarmIsCold(t, name)
+    }
+    locally { // keyless DELETE WHERE: the file-identity rewrite path
+      val t = Lake.createAppendLog(spark, Lake.freshRoot(),
+        (1L to 60L).map(i => (i, s"m$i", i % 5)).toDF("id", "msg", "shard"), 2)
+      plantMetadataRacer(t)
+      t.withRetry(t.deleteWhere(col("shard") === 2L)).version shouldBe 2
+      t.onBeforeCommit = () => ()
+      t.read().count() shouldBe 48L
+      assertWarmIsCold(t, "keyless delete where")
+    }
+    locally { // shallow clone's v0 and a fresh create index cold-equal state
+      val src = wideTable()
+      assertWarmIsCold(src, "create")
+      val clone = src.cloneShallow(Lake.freshRoot())
+      assertWarmIsCold(clone, "clone")
+    }
+    locally { // exhausted retries still fail loudly, after exactly 3 attempts
+      val t = mkTable()
+      var attempts = 0
+      t.onBeforeCommit = () => {
+        attempts += 1
         val v = t.latestVersion + 1
         val racing = t.manifest(t.latestVersion)
           .copy(version = v, parentVersion = v - 1, operation = "racer")
@@ -318,8 +394,9 @@ class LakeDeltaSpec extends SparkTestBase {
         out.write(Lake.toJson(racing).getBytes); out.close()
       }
       intercept[java.util.ConcurrentModificationException] {
-        t.deleteWithRetry(Seq(5L).toDF("k"), maxAttempts = 2)
+        t.withRetry(t.delete(Seq(5L).toDF("k")))
       }
+      attempts shouldBe 3
     }
   }
   test("mergeInto without INSERT replays when a racer inserts an unmatched source key") {
@@ -338,10 +415,10 @@ class LakeDeltaSpec extends SparkTestBase {
         racer.insertAll(Seq((500L, "RACER")).toDF("k", "payload"))
       }
     }
-    val s = t.mergeIntoWithRetry(Seq((500L, "X")).toDF("k", "payload"),
+    val s = t.withRetry(t.mergeInto(Seq((500L, "X")).toDF("k", "payload"),
       whenMatchedDeleteIf = Some(lit(true)),
       whenMatchedUpdateIf = Some(lit(false)),
-      whenNotMatchedInsert = false)
+      whenNotMatchedInsert = false))
     s.version shouldBe 2 // lost v1 to the racer, declined rebase, replayed
     t.read().filter(col("k") === 500L).count() shouldBe 0L
     t.read().count() shouldBe 90L
@@ -425,63 +502,63 @@ class LakeDeltaSpec extends SparkTestBase {
             (k, s"m$step-$k", "M")
           }.distinctBy(_._1)
           rows.foreach { case (k, p, s0) => model(k) = (p, s0) }
-          t.mergeWithRetry(df(rows))
+          t.withRetry(t.merge(df(rows)))
         case 1 => // COW delete of (maybe-absent) keys
           val ks = (1 to 3).map(_ => rnd.nextLong(250) + 1)
           ks.foreach(model.remove)
-          t.deleteWithRetry(ks.toDF("k"))
+          t.withRetry(t.delete(ks.toDF("k")))
         case 2 => // deferred (tombstone) delete
           val ks = (1 to 3).map(_ => rnd.nextLong(250) + 1)
           ks.foreach(model.remove)
-          t.deleteDeferredWithRetry(ks.toDF("k"))
+          t.withRetry(t.deleteDeferred(ks.toDF("k")))
         case 3 => // predicate update over the current logical names
           model.keys.toSeq.foreach { k =>
             if (k % 10 == step % 10)
               model(k) = (model(k)._1, s"U$step")
           }
-          t.updateWithRetry(col("k") % 10 === step % 10,
-            Seq("status" -> lit(s"U$step")))
+          t.withRetry(t.update(col("k") % 10 === step % 10,
+            Seq("status" -> lit(s"U$step"))))
         case 4 => // append-only insert of fresh keys
           val rows = (1 to 3).map(_ => { val k = freshKey(); (k, s"i$k", "I") })
           rows.foreach { case (k, p, s0) => model(k) = (p, s0) }
-          t.insertAllWithRetry(df(rows))
+          t.withRetry(t.insertAll(df(rows)))
         case 5 => // conditional merge: delete claused on source status
           val victim = rnd.nextLong(200) + 1
           val keep = freshKey()
           val rows = Seq((victim, "DEAD", "D"), (keep, s"c$keep", "C"))
           model.remove(victim)
           model(keep) = (s"c$keep", "C")
-          t.mergeIntoWithRetry(df(rows),
+          t.withRetry(t.mergeInto(df(rows),
             whenMatchedDeleteIf = Some(col("source.status") === "D"),
             whenMatchedUpdateIf = Some(lit(false)),
-            whenNotMatchedInsertIf = Some(col("source.status") === "C"))
-        case 6 => t.compactWithRetry(4)
-        case 7 => t.compactBinPackWithRetry(10L, 60L)
+            whenNotMatchedInsertIf = Some(col("source.status") === "C")))
+        case 6 => t.withRetry(t.compact(4))
+        case 7 => t.withRetry(t.compactBinPack(10L, 60L))
         case 8 if step == 12 => // one mid-sequence metadata-only rename
-          t.renameColumnWithRetry("payload", "note")
+          t.withRetry(t.renameColumn("payload", "note"))
           payloadCol = "note"
         case 9 => // deferred PREDICATE delete (replays on a lost race —
           // the racer's fresh key is > 250, so the re-scan is identical)
           model.keys.toSeq.foreach { k =>
             if (k % 25 == step % 25 && k <= 250) model.remove(k)
           }
-          t.deleteDeferredWhereWithRetry(
-            col("k") % 25 === step % 25 && col("k") <= 250)
+          t.withRetry(t.deleteDeferredWhere(
+            col("k") % 25 === step % 25 && col("k") <= 250))
         case 10 if step > 6 && extraCols.isEmpty => // one metadata-only
           // ADD COLUMN: every later batch must carry it (null)
-          t.addColumnWithRetry("annot", "string")
+          t.withRetry(t.addColumn("annot", "string"))
           extraCols = Seq("annot")
         case 11 => // predicate-scoped re-cluster: layout-only, no rows move
-          t.compactWhereWithRetry(col("k") <= 100L, 2,
-            Some(("sort", Seq("status"))))
+          t.withRetry(t.compactWhere(col("k") <= 100L, 2,
+            Some(("sort", Seq("status")))))
         case 12 if step > 4 && !evolved => // one mid-sequence metadata-only
           // PARTITION-SPEC evolution: content unchanged; later rewrites
           // land in the new layout, old eras keep theirs — every
           // subsequent verb must stay exact across mixed layouts (and a
           // lost race against this commit must replay, never splice)
-          t.alterPartitioningWithRetry(Seq("status"))
+          t.withRetry(t.alterPartitioning(Seq("status")))
           evolved = true
-        case _ => t.compactWithRetry(3)
+        case _ => t.withRetry(t.compact(3))
       }
       racerRow.foreach { rk =>
         if (!planted) {
@@ -489,6 +566,7 @@ class LakeDeltaSpec extends SparkTestBase {
           racer.insertAll(df(Seq((rk, s"race$rk", "R"))))
         }
       }
+      assertWarmIsCold(t, s"step $step")
       // incremental MV refresh mid-interleave (the racer seam must not
       // fire during the refresh's state-table commit)
       if (step % 6 == 0) { t.onBeforeCommit = () => (); assertMvFresh() }
@@ -542,33 +620,33 @@ class LakeDeltaSpec extends SparkTestBase {
           val rows = Seq((fresh(), s"a$step", step % 7L),
             (5L, "m5", 5L % 7))
           rows.foreach(r => model(r) += 1)
-          t.insertAllWithRetry(rows.toDF("id", "msg", "shard"))
+          t.withRetry(t.insertAll(rows.toDF("id", "msg", "shard")))
         case 1 => // predicate COW delete (never touches shard 99)
           val s0 = step % 7L
           model.keys.toSeq.filter(_._3 == s0).foreach(model.remove)
-          t.deleteWhereWithRetry(col("shard") === s0)
+          t.withRetry(t.deleteWhere(col("shard") === s0))
         case 2 => // predicate update of msg (never touches shard 99)
           val s0 = (step + 3) % 7L
           model.keys.toSeq.filter(_._3 == s0).foreach { k =>
             val n = model.remove(k).get
             model((k._1, s"U$step", k._3)) += n
           }
-          t.updateWithRetry(col("shard") === s0,
-            Seq("msg" -> lit(s"U$step")))
+          t.withRetry(t.update(col("shard") === s0,
+            Seq("msg" -> lit(s"U$step"))))
         case 3 =>
           // alternate the two layout-only maintenance verbs: binpack
           // folds small files, MIGRATE folds foreign-era files — both
           // must never change content
-          if (step % 2 == 0) t.compactBinPackWithRetry(10L, 40L)
-          else t.compactMigrateWithRetry()
-        case 4 => t.compactWithRetry(2)
+          if (step % 2 == 0) t.withRetry(t.compactBinPack(10L, 40L))
+          else t.withRetry(t.compactMigrate())
+        case 4 => t.withRetry(t.compact(2))
         case 5 => // flip the partition spec: shard-partitioned <-> flat
           evolvedTo = if (evolvedTo.isEmpty) Seq("shard") else Nil
-          t.alterPartitioningWithRetry(evolvedTo)
+          t.withRetry(t.alterPartitioning(evolvedTo))
         case _ => // bulk append of fresh rows
           val rows = (1 to 4).map(_ => (fresh(), s"b$step", step % 7L))
           rows.foreach(r => model(r) += 1)
-          t.insertAllWithRetry(rows.toDF("id", "msg", "shard"))
+          t.withRetry(t.insertAll(rows.toDF("id", "msg", "shard")))
       }
       racerRow.foreach { r =>
         if (!planted) {
@@ -576,6 +654,7 @@ class LakeDeltaSpec extends SparkTestBase {
           racer.insertAll(Seq(r).toDF("id", "msg", "shard"))
         }
       }
+      assertWarmIsCold(t, s"step $step")
     }
     t.onBeforeCommit = () => ()
     val got = t.read().collect()

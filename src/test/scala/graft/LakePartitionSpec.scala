@@ -532,7 +532,7 @@ class LakePartitionSpec extends SparkTestBase {
     } finally t.onBeforeCommit = () => ()
     // the evolution survived; a REPLAYED insert lands under the new spec
     t.manifest(t.latestVersion).partitionCols shouldBe Seq("q")
-    t.insertAllWithRetry(Seq((100L, 1L, 2L)).toDF("k", "p", "q"))
+    t.withRetry(t.insertAll(Seq((100L, 1L, 2L)).toDF("k", "p", "q")))
     t.manifest(t.latestVersion).partitionCols shouldBe Seq("q")
     val newest = t.manifest(t.latestVersion).files.map(_.path)
       .filterNot(t.manifest(1).files.map(_.path).toSet)

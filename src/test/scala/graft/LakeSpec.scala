@@ -93,7 +93,7 @@ class LakeSpec extends SparkTestBase {
     t.read().count() shouldBe 90L
   }
 
-  test("mergeWithRetry replays a lost commit race against the winner's state") {
+  test("withRetry(merge) replays a lost commit race against the winner's state") {
     val t = mkTable()
     val fs = new Path(t.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the racing winner lands version 1 AFTER our merge has picked its
@@ -109,16 +109,18 @@ class LakeSpec extends SparkTestBase {
       }
     }
     try {
-      val stats = t.mergeWithRetry(
-        Seq((5L, "NEW5", "U")).toDF("k", "payload", "status"))
+      val stats = t.withRetry(t.merge(
+        Seq((5L, "NEW5", "U")).toDF("k", "payload", "status")))
       // attempt 1 lost v1; the replay re-read the winner's snapshot and
       // committed v2 with the upsert applied
       stats.version shouldBe 2
       rows(t.read().filter(col("k") === 5L)) shouldBe Seq(Seq(5L, "NEW5", "U"))
       t.read().count() shouldBe 90L
     } finally t.onBeforeCommit = () => ()
-    // exhausted retries still fail loudly
+    // exhausted retries still fail loudly, after exactly 3 attempts
+    var attempts = 0
     t.onBeforeCommit = () => {
+      attempts += 1
       val v = t.latestVersion + 1
       val racing = t.manifest(0).copy(version = v, parentVersion = v - 1,
         operation = "merge")
@@ -126,9 +128,9 @@ class LakeSpec extends SparkTestBase {
       out.write(Lake.toJson(racing).getBytes); out.close()
     }
     try intercept[java.util.ConcurrentModificationException] {
-      t.mergeWithRetry(Seq((6L, "X", "U")).toDF("k", "payload", "status"),
-        maxAttempts = 2)
+      t.withRetry(t.merge(Seq((6L, "X", "U")).toDF("k", "payload", "status")))
     } finally t.onBeforeCommit = () => ()
+    attempts shouldBe 3
   }
 
   test("COW delete: partial files rewrite to survivors, full files vanish") {
@@ -738,7 +740,7 @@ class LakeSpec extends SparkTestBase {
     }
     t.onBeforeCommit = () => ()
     // the replay loop still converges to both results
-    t.mergeWithRetry(Seq((5L, "X5", "U")).toDF("k", "payload", "status"))
+    t.withRetry(t.merge(Seq((5L, "X5", "U")).toDF("k", "payload", "status")))
     rows(t.read().filter(col("k").isin(5L, 7L))
       .select("k", "payload").orderBy("k")) shouldBe
       Seq(Seq(5L, "X5"), Seq(7L, "W7"))
@@ -851,7 +853,7 @@ class LakeSpec extends SparkTestBase {
     }
     t.onBeforeCommit = () => ()
     // replay converges with the widened schema intact
-    t.mergeWithRetry(Seq((5L, 5, "X5")).toDF("k", "i", "payload"))
+    t.withRetry(t.merge(Seq((5L, 5, "X5")).toDF("k", "i", "payload")))
     t.read().schema("i").dataType shouldBe LongType
     rows(t.read().filter(col("k") === 65L).select("i")) shouldBe
       Seq(Seq(9000000000L))
