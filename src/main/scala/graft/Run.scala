@@ -191,7 +191,7 @@ object Run {
         case "lake-sortby" =>
           need(4)
           val s = table.withRetry(
-            table.compactSortBy(args(2).toInt, args.drop(3).toSeq: _*))
+            table.compact(args(2).toInt, Some(("sort", args.drop(3).toSeq))))
           println(s"[lake] sort-clustered by (${args.drop(3).mkString(", ")}) " +
             s"-> v${s.version} (${s.addedFiles} files)")
         case "lake-changes" =>
@@ -200,11 +200,12 @@ object Run {
           println(s"[lake] changes v${args(2)}->v${args(3)} -> ${args(4)}")
         case "lake-compact" =>
           need(3)
-          val s = table.compact(args(2).toInt)
+          val s = table.withRetry(table.compact(args(2).toInt))
           println(s"[lake] compacted -> v${s.version} (${s.addedFiles} files)")
         case "lake-zorder" =>
           need(5)
-          val s = table.compactZOrder(args(2).toInt, args(3), args(4))
+          val s = table.withRetry(table.compact(args(2).toInt,
+            Some(("zorder", Seq(args(3), args(4))))))
           println(s"[lake] z-ordered by (${args(3)}, ${args(4)}) -> " +
             s"v${s.version} (${s.addedFiles} files)")
         case "lake-restore" =>
@@ -225,7 +226,8 @@ object Run {
             s"$m manifests, $f data files")
         case "lake-hilbert" =>
           need(5)
-          val s = table.compactHilbert(args(2).toInt, args.drop(3).toSeq)
+          val s = table.withRetry(table.compact(args(2).toInt,
+            Some(("hilbert", args.drop(3).toSeq))))
           println(s"[lake] hilbert-clustered by (${args.drop(3).mkString(", ")}) " +
             s"-> v${s.version} (${s.addedFiles} files)")
         case "lake-rename" =>

@@ -48,28 +48,4 @@ object Skew {
   def saltedSum(df: DataFrame, keys: Seq[Column], value: Column, salt: Int = 16,
                 out: String = "sum"): DataFrame =
     salted(df, keys, salt, sum(value), sum, out)
-
-  /** Salted equi-join for a skewed fact side: each left row gets a pseudo-
-    * random shard in [0, salt); the (small) right side is replicated salt×
-    * by an in-row sequence explode; the join keys on (key, shard), so a hot
-    * key's rows spread across `salt` tasks instead of crushing one. Result
-    * set equals the plain inner join under ANY shard assignment — the
-    * replicated side carries every shard. AQE's skew-join split repairs
-    * sort-merge skew reactively; explicit salting is the shape for known
-    * hot keys, and costs salt× the RIGHT side (keep it the dimension). */
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-                 salt: Int = 16): DataFrame = {
-    val shard = {
-      var n = "__shard"
-      var i = 0
-      while (left.columns.contains(n) || right.columns.contains(n)) {
-        i += 1; n = s"__shard_$i"
-      }
-      n
-    }
-    val l = left.withColumn(shard,
-      pmod(hash(col(key), monotonically_increasing_id()), lit(salt)))
-    val r = right.withColumn(shard, explode(sequence(lit(0), lit(salt - 1))))
-    l.join(r, Seq(key, shard)).drop(shard)
-  }
 }

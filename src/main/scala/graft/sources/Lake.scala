@@ -588,16 +588,16 @@ object Lake {
 
   /** Gated lane: truncated-STRING file statistics + the OPTIMIZE SORT BY
     * maintenance verb. The lake is created key-clustered (string ranges
-    * span every file — unprunable), then [[LakeTable.compactSortBy]]
-    * re-clusters on the priority string; each file now carries tight
-    * truncated-lower/ceiling-upper string bounds and an equality filter
-    * prunes to the covering files (file-count pinned in
+    * span every file — unprunable), then a sort-layout
+    * [[LakeTable.compact]] re-clusters on the priority string; each file
+    * now carries tight truncated-lower/ceiling-upper string bounds and an
+    * equality filter prunes to the covering files (file-count pinned in
     * `LakePartitionSpec`). The oracle states the same slice raw. */
   def lakeStringPruning(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val t = create(spark, freshRoot(), o, "o_orderkey", 8,
       statsCols = Seq("o_orderpriority"))
-    t.compactSortBy(8, "o_orderpriority")
+    t.compact(8, Some(("sort", Seq("o_orderpriority"))))
     t.read()
       .filter(col("o_orderpriority") === "1-URGENT")
       .groupBy("o_orderstatus")
@@ -1473,7 +1473,7 @@ object Lake {
   }
 
   /** Gated lane: HILBERT-curve clustering — the locality-preserving
-    * OPTIMIZE layout ([[LakeTable.compactHilbert]], SQL
+    * OPTIMIZE layout ([[LakeTable.compact]] with a hilbert layout, SQL
     * `OPTIMIZE … HILBERT BY`). The table re-clusters on the 2-D Hilbert
     * index of (custkey, orderdate); both columns join the stats set and
     * a 2-D box predicate reads a file subset (the better-or-equal-than-
@@ -3303,28 +3303,28 @@ class LakeTable(spark: SparkSession, val root: String) {
     MergeStats(cv, m.files.size, 0, 0, 0L)
   }
 
-  /** [[snapshot]] in PHYSICAL names — the internal form every rewrite
-    * verb and layout compaction consumes (their output files must store
-    * physical names). */
-  private def snapshotPhysical(version: Int): DataFrame = {
-    val m = manifest(version)
-    if (m.files.isEmpty)
+  /** `files` of `m` in PHYSICAL names with the snapshot's tombstones
+    * folded — the internal form every rewrite verb and compaction
+    * consumes (their output files must store physical names). */
+  private def physical(m: Manifest, files: Seq[FileEntry]): DataFrame =
+    if (files.isEmpty)
       // a fully-erased snapshot still KNOWS its shape when the commit
       // chain recorded it — readers get a typed empty relation
       m.schemaDdl.map(ddl => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(ddl)))
         .getOrElse(spark.emptyDataFrame)
-    else applyTombstones(m, readFiles(m, m.files))
-  }
+    else applyTombstones(m, readFiles(m, files))
 
   /** Time travel: the relation AS OF `version` — a plain multi-file
     * parquet scan over that version's resolved file set (COW keeps old
     * files live until a retention vacuum), projected to that version's
     * LOGICAL column names (renames/drops are per-version metadata, so
     * old snapshots keep their shape). */
-  def snapshot(version: Int): DataFrame =
-    toLogical(manifest(version), snapshotPhysical(version))
+  def snapshot(version: Int): DataFrame = {
+    val m = manifest(version)
+    toLogical(m, physical(m, m.files))
+  }
 
   /** The distinct deleted keys of a snapshot's tombstone files, as a
     * one-column relation named after the merge key — None when clean.
@@ -4748,18 +4748,15 @@ class LakeTable(spark: SparkSession, val root: String) {
     val newSchemaDdl = m.schemaDdl.map(ddl => Lake.widenSchema(
       org.apache.spark.sql.types.StructType.fromDDL(ddl),
       updates.schema, m.partitionCols).toDDL)
-    val tombKeys = tombstoneKeys(m)
     val rewritten =
       if (hit.isEmpty) updates
       else {
         // mergeSchema + allowMissingColumns: a merge may WIDEN the schema
         // (schema evolution) — survivors of rewritten files carry null for
         // columns only the updates have; carried-over files stay untouched
-        // and read back null through the merged-schema scan
-        val hitDf0 = readFiles(m, hit.map(_._1))
-        // outstanding deferred deletes fold physically into the rewrite
-        val hitDf = tombKeys.fold(hitDf0)(tk =>
-          hitDf0.join(tk, Seq(keyCol), "left_anti"))
+        // and read back null through the merged-schema scan. Outstanding
+        // deferred deletes fold physically into the rewrite
+        val hitDf = applyTombstones(m, readFiles(m, hit.map(_._1)))
         // widen, never narrow: updates missing table columns would silently
         // null them on every updated row (allowMissingColumns fills both
         // directions) — reject instead, loudly
@@ -5506,15 +5503,12 @@ class LakeTable(spark: SparkSession, val root: String) {
       case None => (hitFileIndexes(m, keys), None)
     }
     val (hit, kept) = m.files.zipWithIndex.partition { case (_, i) => hitIdx(i) }
-    val tombKeys = tombstoneKeys(m)
     val newFiles =
       if (hit.isEmpty) Seq.empty[FileEntry]
       else {
-        val hitDf0 = readFiles(m, hit.map(_._1))
         // outstanding deferred deletes fold physically into the rewrite;
         // the tombstone entries stand for the files that carry over
-        val hitDf = tombKeys.fold(hitDf0)(tk =>
-          hitDf0.join(tk, Seq(keyCol), "left_anti"))
+        val hitDf = applyTombstones(m, readFiles(m, hit.map(_._1)))
         val survivors = hitDf.join(
           keys.select(col(keys.columns.head).as(keyCol)), Seq(keyCol), "left_anti")
         writeDataFiles(survivors, keyCol,
@@ -5819,35 +5813,6 @@ class LakeTable(spark: SparkSession, val root: String) {
     MergeStats(cv, m.files.size, 0, 0, 0L)
   }
 
-  /** OPTIMIZE … MIGRATE — fold pre-evolution LAYOUT ERAS into the
-    * current partition spec: only files whose directory signature
-    * differs from the spec rewrite (O(older eras), so evolution's debt
-    * retires incrementally, a compaction-sized job at a time — never a
-    * forced O(table) rewrite at evolution time); files already in the
-    * current layout carry by reference. Once migration completes, the
-    * snapshot is single-era again and the one-scan fast paths (format
-    * reader file relation, ungrouped reads) return. Folds outstanding
-    * tombstones like every compaction. No-op when nothing is foreign. */
-  def compactMigrate(numFiles: Int = 0): MergeStats = {
-    val v = latestVersion
-    val m = manifest(v)
-    val cur = m.partitionCols.map(_.toLowerCase)
-    val (hit, kept) = m.files.partition(f =>
-      Lake.hiveSig(f.path).map(_.toLowerCase) != cur)
-    if (hit.isEmpty) return MergeStats(v, m.files.size, 0, 0, 0L)
-    val hitRows = hit.map(_.rows).sum
-    val numOut = if (numFiles > 0) numFiles else sizedFileCount(1, hitRows)
-    val packed0 = readFiles(m, hit)
-    val packed = tombstoneKeys(m).fold(packed0)(tk =>
-      packed0.join(tk, Seq(m.keyCol), "left_anti"))
-    val newFiles = writeDataFiles(packed, m.keyCol, numOut, m.statsCols,
-      partitionCols = m.partitionCols)
-    val cv = commitAndIndex(nextDelta(m, "optimize-migrate")
-      .copy(adds = newFiles, removes = hit.map(_.path)),
-      rebaseEnvelope = Some(() => rangeEnvelope(hit ++ newFiles)))
-    MergeStats(cv, kept.size, hit.size, newFiles.size, hitRows)
-  }
-
   /** RESTORE — roll the table back to `version`'s content AS A NEW
     * COMMIT (never by deleting history): the new manifest re-references
     * the old version's files and tombstones byte-for-byte, so the bad
@@ -5894,21 +5859,47 @@ class LakeTable(spark: SparkSession, val root: String) {
     t
   }
 
-  /** Table-maintenance compaction: rewrite the LATEST snapshot into
-    * `numFiles` key-range-clustered files as a new snapshot (operation
-    * "compact"). Pure COW — the fragmented version stays readable until
-    * [[vacuum]]. Commits as a FULL delta (its adds ARE the state), so a
-    * compact doubles as a resolution anchor — the small-files answer for
-    * a table fed by many incremental merges also caps its delta chains. */
-  def compact(numFiles: Int): MergeStats = {
-    val v = latestVersion
-    val m = manifest(v)
-    val newFiles = writeDataFiles(snapshotPhysical(v), m.keyCol, numFiles,
-      m.statsCols, partitionCols = m.partitionCols,
-      estRows = m.files.map(_.rows).sum)
-    val cv = commitAndIndex(
-      nextDelta(m, "compact").copy(full = true, adds = newFiles))
-    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
+  /** OPTIMIZE — table-maintenance compaction: rewrite the LATEST snapshot
+    * into `numFiles` files as a new snapshot. Pure COW — the fragmented
+    * version stays readable until [[vacuum]]. Commits as a FULL delta
+    * (its adds ARE the state), so a compact doubles as a resolution
+    * anchor — the small-files answer for a table fed by many incremental
+    * merges also caps its delta chains. Folds outstanding tombstones.
+    *
+    * `layout` is the cluster order ([[layoutCluster]]); None range-
+    * clusters on the key (operation `compact`):
+    *  - `("sort", cols)` — a linear sort order on arbitrary columns,
+    *    operation `optimize-sortby-<physical cols>`
+    *  - `("zorder", cols)`, n ≥ 2 — the Morton z-value (Delta's
+    *    `OPTIMIZE … ZORDER BY` shape): bit j of dimension i lands at
+    *    position j·n + i; operation `optimize-zorder` for two columns,
+    *    `optimize-zorder-<n>d` beyond
+    *  - `("hilbert", cols)`, n ≥ 2 — the Hilbert index: consecutive
+    *    indices are always unit-adjacent in coordinate space, so key-
+    *    range-contiguous files cover tighter boxes and n-D box
+    *    predicates prune at least as well as under Morton (the spec pins
+    *    that on a 3-D fixture); operation `optimize-hilbert-<n>d`.
+    * The layout columns join the stats set — numeric/date/timestamp
+    * columns get [min,max] in stat units, STRING columns truncated lower
+    * / incremented-ceiling upper bounds — so [[LakeManifestPrune]] skips
+    * files for predicates (n-D boxes, for the curves) on them. The trade
+    * is deliberate: the merge KEY's per-file ranges widen (keys interleave
+    * across clusters), so key-range pruning and merge file-hit ratios
+    * degrade, and each added curve dimension prunes more weakly —
+    * re-cluster a table that is read by those columns far more often than
+    * it is merged by key. Hive-partitioned tables cluster WITHIN each
+    * partition directory. */
+  def compact(numFiles: Int,
+              layout: Option[(String, Seq[String])] = None): MergeStats = {
+    val m = manifest(latestVersion)
+    val op = layout match {
+      case None => "compact"
+      case Some(("sort", cols)) => "optimize-sortby-" +
+        cols.map(c => m.columnMap.getOrElse(c, c)).mkString("-")
+      case Some(("zorder", Seq(_, _))) => "optimize-zorder"
+      case Some((kind, cols)) => s"optimize-$kind-${cols.size}d"
+    }
+    optimize(m, m.files, numFiles, layout, op, full = true)
   }
 
   /** OPTIMIZE BINPACK — the INCREMENTAL compaction a 100 TB table
@@ -5933,25 +5924,16 @@ class LakeTable(spark: SparkSession, val root: String) {
     require(maxRows == 0L || maxRows >= minRows,
       "SPLIT threshold must be at least the binpack minimum")
     val target = if (targetRows > 0) targetRows else 2 * minRows
-    val v = latestVersion
-    val m = manifest(v)
-    val (small, rest) = m.files.partition(_.rows < minRows)
-    val (oversized, carried) =
-      rest.partition(f => maxRows > 0 && f.rows > maxRows)
-    val rewrite = small ++ oversized
+    val m = manifest(latestVersion)
+    val small = m.files.filter(_.rows < minRows)
+    // maxRows ≥ minRows: an oversized file is never also small
+    val oversized = m.files.filter(f => maxRows > 0 && f.rows > maxRows)
     if (small.size <= 1 && oversized.isEmpty)
-      return MergeStats(v, m.files.size, 0, 0, 0L)
-    val rewriteRows = rewrite.map(_.rows).sum
-    val numOut = math.max(1L, (rewriteRows + target - 1) / target).toInt
-    val packed0 = readFiles(m, rewrite)
-    val packed = tombstoneKeys(m).fold(packed0)(tk =>
-      packed0.join(tk, Seq(m.keyCol), "left_anti"))
-    val newFiles = writeDataFiles(packed, m.keyCol, numOut, m.statsCols,
-      partitionCols = m.partitionCols)
-    val cv = commitAndIndex(nextDelta(m, "optimize-binpack")
-      .copy(adds = newFiles, removes = rewrite.map(_.path)),
-      rebaseEnvelope = Some(() => rangeEnvelope(rewrite ++ newFiles)))
-    MergeStats(cv, carried.size, rewrite.size, newFiles.size, rewriteRows)
+      return MergeStats(m.version, m.files.size, 0, 0, 0L)
+    val rewrite = small ++ oversized
+    val rows = rewrite.map(_.rows).sum
+    optimize(m, rewrite, math.max(1L, (rows + target - 1) / target).toInt,
+      None, "optimize-binpack", full = false)
   }
 
   /** OPTIMIZE … WHERE — PREDICATE-SCOPED compaction (Delta's
@@ -5966,11 +5948,11 @@ class LakeTable(spark: SparkSession, val root: String) {
     * inclusion is a layout choice, never a semantic one). Commits an
     * ordinary delta (not an anchor). No matching files → no-op.
     *
-    * `layout` composes PREDICATE-SCOPED selection with the re-cluster
-    * expression of the whole-table layout verbs — `("sort"|"zorder"|
-    * "hilbert", cols)` rewrites just the selected files ordered by that
-    * layout (the cols join the stats set, so [[LakeManifestPrune]] can
-    * skip the re-clustered files on them). This is the real maintenance
+    * `layout` composes PREDICATE-SCOPED selection with the layouts of
+    * the whole-table [[compact]] — `("sort"|"zorder"|"hilbert", cols)`
+    * rewrites just the selected files ordered by that layout (the cols
+    * join the stats set, so [[LakeManifestPrune]] can skip the
+    * re-clustered files on them). This is the real maintenance
     * loop — "re-cluster yesterday's partition" — at O(selected), where
     * the whole-table `OPTIMIZE … ZORDER/HILBERT/SORT BY` pays O(table).
     * Files OUTSIDE the predicate keep their old layout (and carry no
@@ -5979,81 +5961,94 @@ class LakeTable(spark: SparkSession, val root: String) {
   def compactWhere(condition: org.apache.spark.sql.Column,
                    numFiles: Int = 0,
                    layout: Option[(String, Seq[String])] = None): MergeStats = {
-    val v = latestVersion
-    val m = manifest(v)
+    val m = manifest(latestVersion)
     // the shared predicate-scoped selection (key+partition probe for
     // keyed tables — a partition-scoped OPTIMIZE must not drag in other
     // partitions' files whose key ranges merely overlap; file-identity
     // scan for keyless)
-    val (hit, kept) = hitKeptFiles(m, condition)
-    if (hit.isEmpty) return MergeStats(v, m.files.size, 0, 0, 0L)
+    optimize(m, hitKeptFiles(m, condition)._1, numFiles, layout,
+      layout.fold("optimize-where")(l => s"optimize-where-${l._1}"),
+      full = false)
+  }
+
+  /** OPTIMIZE … MIGRATE — fold pre-evolution LAYOUT ERAS into the
+    * current partition spec: only files whose directory signature
+    * differs from the spec rewrite (O(older eras), so evolution's debt
+    * retires incrementally, a compaction-sized job at a time — never a
+    * forced O(table) rewrite at evolution time); files already in the
+    * current layout carry by reference. Once migration completes, the
+    * snapshot is single-era again and the one-scan fast paths (format
+    * reader file relation, ungrouped reads) return. Folds outstanding
+    * tombstones like every compaction. No-op when nothing is foreign. */
+  def compactMigrate(numFiles: Int = 0): MergeStats = {
+    val m = manifest(latestVersion)
+    val cur = m.partitionCols.map(_.toLowerCase)
+    optimize(m,
+      m.files.filter(f => Lake.hiveSig(f.path).map(_.toLowerCase) != cur),
+      numFiles, None, "optimize-migrate", full = false)
+  }
+
+  /** The one OPTIMIZE core every compaction form feeds: read the selected
+    * files `hit` with the outstanding tombstones folded, re-cluster them
+    * by `layout` (the key when None) into `numFiles` files, and commit.
+    * `full` is the whole-table form: `hit` is the snapshot and the commit
+    * is a full (anchor) delta. Otherwise the commit is an incremental
+    * delta that removes `hit`, carries every other file by reference and
+    * rebases on the `hit ∪ newFiles` key envelope; such a scoped form
+    * commits nothing when nothing is selected, and `numFiles` ≤ 0 means
+    * the target-size policy over the selected rows. Only the whole-table
+    * form hands its manifest row count to the writer's small-write path
+    * (which un-clustered writes alone take). */
+  private def optimize(m: Manifest, hit: Seq[FileEntry], numFiles: Int,
+                       layout: Option[(String, Seq[String])],
+                       operation: String, full: Boolean): MergeStats = {
+    if (hit.isEmpty && !full)
+      return MergeStats(m.version, m.files.size, 0, 0, 0L)
     val hitRows = hit.map(_.rows).sum
+    val packed = physical(m, hit)
+    val clustered = layout.map(layoutCluster(m, packed, _))
+    val statsCols = (m.statsCols ++ clustered.toSeq.flatMap(_._2)).distinct
     val numOut =
-      if (numFiles > 0) numFiles else sizedFileCount(1, hitRows)
-    val packed0 = readFiles(m, hit)
-    val packed = tombstoneKeys(m).fold(packed0)(tk =>
-      packed0.join(tk, Seq(m.keyCol), "left_anti"))
-    // optional layout re-cluster of JUST the selected subset: the same
-    // cluster expressions the whole-table verbs use, on physical names
-    val physLayoutCols = layout.toSeq.flatMap(_._2)
-      .map(c => m.columnMap.getOrElse(c, c))
-    val cluster = layout.map {
-      case ("sort", cols) =>
-        struct(cols.map(c => col(m.columnMap.getOrElse(c, c))): _*)
-      case ("zorder", cols) => org.apache.spark.sql.graft.ZValue.zvalueN(
-        cols.map(c => zDim(packed, m.columnMap.getOrElse(c, c))))
-      case ("hilbert", cols) => org.apache.spark.sql.graft.Hilbert.hilbert(
-        cols.map(c => zDim(packed, m.columnMap.getOrElse(c, c))))
-      case (other, _) =>
+      if (full || numFiles > 0) numFiles else sizedFileCount(1, hitRows)
+    val newFiles = writeDataFiles(packed, m.keyCol, numOut, statsCols,
+      clustered.map(_._1), partitionCols = m.partitionCols,
+      estRows = if (full) hitRows else -1L)
+    val d = nextDelta(m, operation).copy(statsCols = statsCols, adds = newFiles)
+    val cv =
+      if (full) commitAndIndex(d.copy(full = true))
+      else commitAndIndex(d.copy(removes = hit.map(_.path)),
+        rebaseEnvelope = Some(() => rangeEnvelope(hit ++ newFiles)))
+    // whole-table forms report no per-row work, scoped forms the rows
+    // they rewrote
+    MergeStats(cv, m.files.size - hit.size, hit.size, newFiles.size,
+      if (full) 0L else hitRows)
+  }
+
+  /** The one OPTIMIZE layout map: `(kind, cols)` in LOGICAL names as the
+    * cluster expression over the physical frame `df`, plus the physical
+    * columns that join the stats set. */
+  private def layoutCluster(m: Manifest, df: DataFrame,
+                            layout: (String, Seq[String]))
+      : (org.apache.spark.sql.Column, Seq[String]) = {
+    val (kind, cols) = layout
+    val phys = cols.map(c => m.columnMap.getOrElse(c, c))
+    val cluster = kind match {
+      case "sort" =>
+        require(phys.nonEmpty, "SORT BY needs at least one column")
+        struct(phys.map(col): _*)
+      case "zorder" =>
+        require(phys.size >= 2, "ZORDER BY needs at least two columns")
+        org.apache.spark.sql.graft.ZValue.zvalueN(phys.map(zDim(df, _)))
+      case "hilbert" =>
+        require(phys.size >= 2, "HILBERT BY needs at least two columns")
+        org.apache.spark.sql.graft.Hilbert.hilbert(phys.map(zDim(df, _)))
+      case other =>
         throw new IllegalArgumentException(s"unknown layout '$other'")
     }
-    val statsCols = (m.statsCols ++ physLayoutCols).distinct
-    val op = layout.fold("optimize-where")(l => s"optimize-where-${l._1}")
-    val newFiles = writeDataFiles(packed, m.keyCol, numOut, statsCols,
-      cluster, partitionCols = m.partitionCols)
-    val cv = commitAndIndex(nextDelta(m, op).copy(statsCols = statsCols,
-      adds = newFiles, removes = hit.map(_.path)),
-      rebaseEnvelope = Some(() => rangeEnvelope(hit ++ newFiles)))
-    MergeStats(cv, kept.size, hit.size, newFiles.size, hitRows)
+    (cluster, phys)
   }
 
-  /** OPTIMIZE SORT BY — rewrite the latest snapshot range-clustered on an
-    * arbitrary column list (the Delta `OPTIMIZE ... ZORDER`'s simpler
-    * sibling: a linear sort order). The sort columns join the stats set —
-    * numeric/date/timestamp columns get [min,max] in stat units, STRING
-    * columns get truncated lower / incremented-ceiling upper bounds
-    * ([[Lake.strLower]]/[[Lake.strUpper]]) — so [[LakeManifestPrune]]
-    * skips files for predicates on the new leading sort column. Same
-    * trade as z-order, documented there: the merge KEY's per-file ranges
-    * widen. Folds outstanding tombstones like [[compact]]. */
-  def compactSortBy(numFiles: Int, sortCols: String*): MergeStats = {
-    require(sortCols.nonEmpty, "compactSortBy needs at least one column")
-    val v = latestVersion
-    val m = manifest(v)
-    // callers name LOGICAL columns; the physical frame speaks physical
-    val physCols = sortCols.map(c => m.columnMap.getOrElse(c, c))
-    val statsCols = (m.statsCols ++ physCols).distinct
-    val cluster = struct(physCols.map(col): _*)
-    // hive-partitioned tables re-cluster WITHIN each partition directory
-    val newFiles = writeDataFiles(snapshotPhysical(v), m.keyCol, numFiles,
-      statsCols, Some(cluster), partitionCols = m.partitionCols)
-    val cv = commitAndIndex(nextDelta(m, s"optimize-sortby-${physCols.mkString("-")}")
-      .copy(statsCols = statsCols, full = true, adds = newFiles))
-    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
-  }
-
-  /** OPTIMIZE ZORDER — rewrite the latest snapshot clustered on the
-    * Morton z-value of two numeric columns (the Delta `OPTIMIZE ... ZORDER
-    * BY` shape, on the engine's own codegen `ZValue` expression). Both
-    * columns join the table's stats set, so every file carries tight
-    * [min,max] on BOTH dimensions and [[LakeManifestPrune]] skips files
-    * for 2-D box/strip predicates. The standard trade applies and is
-    * deliberate: the merge KEY's per-file ranges widen (keys interleave
-    * across z-blocks), so key-range pruning and merge file-hit ratios
-    * degrade — z-order a table that is read by (c1, c2) far more often
-    * than it is merged by key. Folds any outstanding tombstones, like
-    * [[compact]]. */
-  /** One z-order dimension as a LONG clustering value: numeric/date/
+  /** One curve dimension as a LONG clustering value: numeric/date/
     * timestamp columns through [[Lake.statLong]] (range locality — box
     * predicates prune), STRING columns through a 63-bit hash (equality
     * locality only: identical values co-cluster and the per-file
@@ -6064,71 +6059,6 @@ class LakeTable(spark: SparkSession, val root: String) {
       case org.apache.spark.sql.types.StringType => abs(xxhash64(col(c)))
       case _ => Lake.statLong(df, c)
     }
-
-  def compactZOrder(numFiles: Int, c1: String, c2: String): MergeStats = {
-    val v = latestVersion
-    val m = manifest(v)
-    val (p1, p2) = (m.columnMap.getOrElse(c1, c1), m.columnMap.getOrElse(c2, c2))
-    val statsCols = (m.statsCols ++ Seq(p1, p2)).distinct
-    val snap = snapshotPhysical(v)
-    val z = org.apache.spark.sql.graft.ZValue.zvalue(
-      zDim(snap, p1), zDim(snap, p2))
-    // hive-partitioned tables z-cluster WITHIN each partition directory
-    val newFiles = writeDataFiles(snap, m.keyCol, numFiles, statsCols,
-      Some(z), partitionCols = m.partitionCols)
-    val cv = commitAndIndex(nextDelta(m, "optimize-zorder")
-      .copy(statsCols = statsCols, full = true, adds = newFiles))
-    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
-  }
-
-  /** OPTIMIZE ZORDER over n ≥ 2 columns — [[compactZOrder]] generalized
-    * via the n-ary Morton expression (`ZValueN`): bit j of dimension i
-    * lands at position j·n + i, every named column joins the stats set,
-    * and [[LakeManifestPrune]] skips files for n-D box predicates. The
-    * same deliberate trade as 2-D: per-file ranges of the merge key (and
-    * of each dimension, as n grows) widen — more dimensions each prune
-    * more weakly. */
-  def compactZOrderN(numFiles: Int, cols: Seq[String]): MergeStats = {
-    require(cols.size >= 2, "ZORDER needs at least two columns")
-    val v = latestVersion
-    val m = manifest(v)
-    val physCols = cols.map(c => m.columnMap.getOrElse(c, c))
-    val statsCols = (m.statsCols ++ physCols).distinct
-    val snap = snapshotPhysical(v)
-    val z = org.apache.spark.sql.graft.ZValue.zvalueN(
-      physCols.map(c => zDim(snap, c)))
-    // hive-partitioned tables z-cluster WITHIN each partition directory
-    val newFiles = writeDataFiles(snap, m.keyCol, numFiles, statsCols,
-      Some(z), partitionCols = m.partitionCols)
-    val cv = commitAndIndex(nextDelta(m, s"optimize-zorder-${cols.size}d")
-      .copy(statsCols = statsCols, full = true, adds = newFiles))
-    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
-  }
-
-  /** OPTIMIZE HILBERT — [[compactZOrderN]]'s locality-preserving sibling:
-    * rewrite the latest snapshot clustered on the n-D HILBERT index
-    * ([[org.apache.spark.sql.graft.HilbertN]]) instead of the Morton
-    * interleave. Consecutive Hilbert indices are always unit-adjacent in
-    * coordinate space, so key-range-contiguous files cover tighter boxes
-    * and n-D box predicates prune at least as well as under Morton (the
-    * spec pins that on a 3-D fixture) — the option Delta grew after
-    * ZORDER for high-n clustering. Same stats/trade notes as z-order. */
-  def compactHilbert(numFiles: Int, cols: Seq[String]): MergeStats = {
-    require(cols.size >= 2, "HILBERT BY needs at least two columns")
-    val v = latestVersion
-    val m = manifest(v)
-    val physCols = cols.map(c => m.columnMap.getOrElse(c, c))
-    val statsCols = (m.statsCols ++ physCols).distinct
-    val snap = snapshotPhysical(v)
-    val h = org.apache.spark.sql.graft.Hilbert.hilbert(
-      physCols.map(c => zDim(snap, c)))
-    // hive-partitioned tables cluster WITHIN each partition directory
-    val newFiles = writeDataFiles(snap, m.keyCol, numFiles, statsCols,
-      Some(h), partitionCols = m.partitionCols)
-    val cv = commitAndIndex(nextDelta(m, s"optimize-hilbert-${cols.size}d")
-      .copy(statsCols = statsCols, full = true, adds = newFiles))
-    MergeStats(cv, 0, m.files.size, newFiles.size, 0L)
-  }
 
   /** Retention vacuum: drop all but the newest `retainVersions` manifests
     * and physically delete every data file referenced ONLY by the dropped

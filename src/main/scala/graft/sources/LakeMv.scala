@@ -1832,11 +1832,11 @@ object LakeMv {
         s"OPTIMIZE MATERIALIZED VIEW: no materialized view '$name' in " +
           s"the graft catalog (kind: ${LakeCatalog.kindOf(spark, name)})")))
     val st = new LakeTable(spark, d.stateRoot)
-    val sv = st.compact(files).version
+    val sv = st.withRetry(st.compact(files)).version
     ("state", d.stateRoot, sv) +: d.countDistinctAggs.map { a =>
       val aux = new LakeTable(spark, d.auxRoot(a.alias))
       (s"distinct:${a.alias}", d.auxRoot(a.alias),
-        aux.compact(files).version)
+        aux.withRetry(aux.compact(files)).version)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Sink helpers — S4 parity (reference: TextOutputFormat with configurable
   * separator, Homework2.scala:548,553; separators per task :565-:670).
@@ -22,97 +22,6 @@ object Sinks {
                    partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  /** ORC — the second columnar format Spark ships natively; interop surface
-    * for Hive-era lakes. Same pushdown/pruning contract as parquet (the
-    * reader reports PushedFilters the same way), verified by LayoutSpec's
-    * roundtrip. */
-  def writeOrc(df: DataFrame, path: String,
-               partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
-  }
-
-  /** Small-files compaction — the table-maintenance pass every streaming /
-    * incremental sink eventually needs: rewrite a parquet directory into
-    * ceil(totalBytes / targetBytes) evenly-sized files. `repartition` (not
-    * `coalesce`): the round-robin exchange costs one shuffle but yields
-    * uniform file sizes; coalesce concatenates input partitions and
-    * preserves their skew. Returns the output file count. */
-  def compact(spark: SparkSession, inDir: String, outDir: String,
-              targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val path = new org.apache.hadoop.fs.Path(inDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val total = fs.getContentSummary(path).getLength
-    val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir).repartition(n)
-      .write.mode("overwrite").parquet(outDir)
-    n
-  }
-
-  /** Key-clustered compaction — compaction PLUS data clustering: rows are
-    * range-repartitioned on the key before the rewrite, so each output
-    * file covers a DISJOINT key range and the format's min/max column
-    * statistics (parquet row-group stats / ORC stripe stats) turn key
-    * predicates into file-level skips. The single-column version of what
-    * Z-ordering does for multi-column predicates; LayoutSpec asserts the
-    * disjointness that data skipping rests on. Same shuffle cost as
-    * [[compact]] (range instead of round-robin exchange). */
-  def compactSorted(spark: SparkSession, inDir: String, outDir: String,
-                    sortCol: String, targetBytes: Long = 128L * 1024 * 1024): Int = {
-    import org.apache.spark.sql.functions.col
-    val path = new org.apache.hadoop.fs.Path(inDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val total = fs.getContentSummary(path).getLength
-    val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir)
-      .repartitionByRange(n, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(outDir)
-    n
-  }
-
-  /** Z-order-clustered parquet — [[compactSorted]] generalized to TWO
-    * predicate columns: rows sort by the Morton interleave of both keys
-    * ([[org.apache.spark.sql.graft.ZValue]], a native codegen expression),
-    * so each output file covers a small RECTANGLE in (a, b) space and the
-    * format's per-file/row-group min/max statistics become selective for
-    * box predicates on EITHER column. Single-column clustering leaves the
-    * second column's stats spanning the whole domain — a predicate on it
-    * alone skips nothing; `ZOrderSpec` measures the difference
-    * quantitatively. Columns are cast to long (cluster on rank-compressed
-    * surrogates for wider/continuous domains — clustering needs order,
-    * not values). Same one-exchange cost as [[compactSorted]]. */
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-                    files: Int): Unit = {
-    import org.apache.spark.sql.functions.col
-    val z = "__graft_z"
-    df.withColumn(z, org.apache.spark.sql.graft.ZValue.zvalue(
-        col(colA).cast("long"), col(colB).cast("long")))
-      .repartitionByRange(files, col(z))
-      .sortWithinPartitions(z)
-      .drop(z)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Per-file (min, max) of the given long-castable columns — the
-    * file-skipping oracle `ZOrderSpec`/`LayoutSpec` assert against. Reads
-    * the data here for exactness; an engine consults the parquet footer
-    * statistics, which carry identical bounds. */
-  def fileRanges(spark: SparkSession, path: String,
-                 cols: Seq[String]): Map[String, Seq[(Long, Long)]] = {
-    import org.apache.spark.sql.functions._
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c).cast("long")).as(s"mn_$c"), max(col(c).cast("long")).as(s"mx_$c")))
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        r.getString(0) -> cols.indices.map(i =>
-          (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))).toSeq
-      }.toMap
   }
 
   /** Bucketed (and per-bucket sorted) managed table — the layout that makes

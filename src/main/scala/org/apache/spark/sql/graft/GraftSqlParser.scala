@@ -115,8 +115,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   * DELETE must be written first because that is
   * the engine's evaluation order — a mis-ordered statement is REJECTED
   * rather than silently reordered), UPDATE → `update`, DELETE →
-  * `deleteWhere`, OPTIMIZE → `compact`/`compactSortBy`/`compactZOrder`,
-  * VACUUM → `vacuum`. Each command returns its stats as rows. */
+  * `deleteWhere`, OPTIMIZE → `compact` (optionally with a sort, z-order
+  * or Hilbert layout) / `compactWhere` / `compactBinPack` /
+  * `compactMigrate`, VACUUM → `vacuum`. Each command returns its stats
+  * as rows. */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   override def parsePlan(sqlText: String): LogicalPlan =
     GraftSqlParser.tryParseDml(sqlText, delegate)
@@ -1562,15 +1564,13 @@ object GraftSqlParser {
         if (cols.isEmpty) fail("SORT BY needs at least one column")
         Some(("sort", cols))
       } else None
-    if (sc.keyword("WHERE")) {
-      // predicate-scoped compaction; a layout clause composes — only
-      // the selected files rewrite, re-clustered by it (the partition-
-      // maintenance loop: "re-cluster yesterday's partition" O(selected))
-      val cond = delegate.parseExpression(sc.restStmt()).sql
-      return LakeOptimizeWhereCommand(root, files.getOrElse(0), cond, layout)
-    }
-    sc.assertEnd()
-    LakeOptimizeCommand(root, files, layout)
+    // predicate-scoped compaction; a layout clause composes — only the
+    // selected files rewrite, re-clustered by it (the partition-
+    // maintenance loop: "re-cluster yesterday's partition" O(selected))
+    val where =
+      if (sc.keyword("WHERE")) Some(delegate.parseExpression(sc.restStmt()).sql)
+      else { sc.assertEnd(); None }
+    LakeOptimizeCommand(root, files, layout, where)
   }
 
   private[graft] def statsOutput: Seq[Attribute] = Seq(
@@ -2106,43 +2106,28 @@ case class LakeDeleteCommand(root: String,
   }
 }
 
-/** `OPTIMIZE graft_lake(…) [FILES n] [ZORDER BY (…) | SORT BY (…)]` →
-  * compact / compactZOrder / compactSortBy. FILES defaults to the
-  * table's current file count (pure re-clustering, no coalescing). */
+/** `OPTIMIZE graft_lake(…) [FILES n] [ZORDER BY (…) | HILBERT BY (…) |
+  * SORT BY (…)] [WHERE <cond>]` → [[graft.sources.LakeTable.compact]]
+  * with that layout, or with WHERE [[graft.sources.LakeTable.compactWhere]]
+  * — predicate-scoped compaction: only the files the predicate can touch
+  * rewrite. FILES defaults to the table's current file count for the
+  * whole table (pure re-clustering, no coalescing) and to the target-size
+  * policy for the scoped form. */
 case class LakeOptimizeCommand(root: String, files: Option[Int],
-                               layout: Option[(String, Seq[String])])
+                               layout: Option[(String, Seq[String])],
+                               whereSql: Option[String])
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = GraftSqlParser.statsOutput
   override def run(spark: SparkSession): Seq[Row] = {
     val t = new graft.sources.LakeTable(spark, root)
-    val n = files.getOrElse(
-      math.max(1, t.manifest(t.latestVersion).files.size))
-    val stats = t.withRetry(layout match {
-      case None => t.compact(n)
-      case Some(("sort", cols)) => t.compactSortBy(n, cols: _*)
-      case Some(("zorder", Seq(c1, c2))) => t.compactZOrder(n, c1, c2)
-      case Some(("zorder", cols)) => t.compactZOrderN(n, cols)
-      case Some(("hilbert", cols)) => t.compactHilbert(n, cols)
-      case Some((other, _)) =>
-        throw new IllegalStateException(s"unknown layout $other")
+    GraftSqlParser.statsRow(whereSql match {
+      case Some(w) => t.withRetry(
+        t.compactWhere(GraftSqlParser.exprCol(w), files.getOrElse(0), layout))
+      case None =>
+        val n = files.getOrElse(
+          math.max(1, t.manifest(t.latestVersion).files.size))
+        t.withRetry(t.compact(n, layout))
     })
-    GraftSqlParser.statsRow(stats)
-  }
-}
-
-/** `OPTIMIZE graft_lake(…) [FILES n] WHERE <cond>` →
-  * [[graft.sources.LakeTable.compactWhere]] — predicate-scoped
-  * compaction: only the files the predicate can touch rewrite (FILES 0 =
-  * target-size policy). */
-case class LakeOptimizeWhereCommand(root: String, files: Int,
-                                    whereSql: String,
-                                    layout: Option[(String, Seq[String])] = None)
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = GraftSqlParser.statsOutput
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = new graft.sources.LakeTable(spark, root)
-    GraftSqlParser.statsRow(
-      t.withRetry(t.compactWhere(GraftSqlParser.exprCol(whereSql), files, layout)))
   }
 }
 

@@ -3,66 +3,16 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.classic.ExpressionUtils
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType}
 
-/** Native Catalyst Morton (Z-order) interleave of two non-negative LONG
-  * keys — the multi-dimensional clustering key behind 2-D data skipping:
-  * sorting rows by `z = interleave(bits(a), bits(b))` makes every
-  * key-range-contiguous file cover a small RECTANGLE in (a, b) space, so
-  * the per-file min/max statistics of BOTH columns become selective for
-  * box predicates — where one-column clustering leaves the second
-  * column's stats spanning the whole domain (no file ever skips).
-  *
-  * Bits are spread with the classic mask ladder (no loop, no branch) so
-  * the expression stays a straight-line codegen kernel inside whole-stage
-  * codegen. The low 31 bits of each input participate (62-bit z-value):
-  * a deployment with wider keys rank-compresses first — clustering only
-  * needs order, not the exact values. Negative inputs fold to their
-  * absolute low bits; callers cluster on non-negative surrogate keys.
-  */
-case class ZValue(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, LongType)
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "graft_zvalue"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ZValue.interleave(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.ZValue.interleave($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
+/** The Morton kernel behind [[ZValueN]] and its Column-API bridge. */
 object ZValue {
-  /** Spread the low 31 bits of x to even bit positions (Morton ladder). */
-  def spread(x: Long): Long = {
-    var v = x & 0x7fffffffL
-    v = (v | (v << 16)) & 0x0000ffff0000ffffL
-    v = (v | (v << 8)) & 0x00ff00ff00ff00ffL
-    v = (v | (v << 4)) & 0x0f0f0f0f0f0f0f0fL
-    v = (v | (v << 2)) & 0x3333333333333333L
-    v = (v | (v << 1)) & 0x5555555555555555L
-    v
-  }
-
-  /** 62-bit Morton code: a's bits at even positions, b's at odd. */
-  def interleave(a: Long, b: Long): Long = spread(a) | (spread(b) << 1)
-
   /** n-dimensional Morton code: bit j of dimension i lands at position
     * j·n + i — each of the n dimensions contributes its low ⌊63/n⌋ bits
-    * (n = 2 reproduces [[interleave]] bit-for-bit, which the spec pins).
+    * (at n = 2: a's low 31 bits at even positions, b's at odd, which the
+    * specs pin against a naive bit loop).
     * A loop, not a mask ladder: n is data-independent and tiny, and the
     * JIT unrolls it — still one straight-line kernel per row. */
   def interleaveN(vs: Array[Long]): Long = {
@@ -83,19 +33,21 @@ object ZValue {
   }
 
   /** Column-API bridge. */
-  def zvalue(a: Column, b: Column): Column =
-    ExpressionUtils.column(ZValue(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** Column-API bridge, n dimensions (2 ≡ [[zvalue]] bit-for-bit). */
   def zvalueN(cols: Seq[Column]): Column =
     ExpressionUtils.column(ZValueN(cols.map(ExpressionUtils.expression)))
 }
 
-/** n-ary Morton interleave — [[ZValue]] generalized to any number of
-  * dimensions (Delta's `OPTIMIZE … ZORDER BY (c1, …, cn)` shape). Same
-  * codegen discipline: children evaluate inline, the interleave is one
-  * static straight-line call. */
+/** Native Catalyst Morton (Z-order) interleave of n ≥ 2 non-negative
+  * LONG keys — the multi-dimensional clustering key behind n-D data
+  * skipping (Delta's `OPTIMIZE … ZORDER BY (c1, …, cn)` shape): sorting
+  * rows by the z-value makes every key-range-contiguous file cover a
+  * small BOX in (c1, …, cn) space, so the per-file min/max statistics of
+  * EVERY column become selective for box predicates — where one-column
+  * clustering leaves the other columns' stats spanning the whole domain
+  * (no file ever skips). Negative inputs fold to their low bits; callers
+  * cluster on non-negative surrogate keys (clustering needs order, not
+  * values). Children evaluate inline and the interleave is one static
+  * call, so the expression stays inside whole-stage codegen. */
 case class ZValueN(children: Seq[Expression])
     extends Expression with ExpectsInputTypes {
 

@@ -303,7 +303,7 @@ class LakeDeltaSpec extends SparkTestBase {
     }
     locally { // OPTIMIZE ZORDER
       val t = mkTable(); plantOnce(t)
-      val s = t.withRetry(t.compactZOrder(2, "k", "k"))
+      val s = t.withRetry(t.compact(2, Some(("zorder", Seq("k", "k")))))
       s.version shouldBe 2
       t.manifest(2).operation shouldBe "optimize-zorder"
       t.read().count() shouldBe 90L
@@ -347,21 +347,61 @@ class LakeDeltaSpec extends SparkTestBase {
       ("drop constraint", _.addConstraint("n_pos", "n >= 0"),
         t => t.withRetry(t.dropConstraint("n_pos"))),
       ("analyze", _ => (), t => t.withRetry(t.analyzeColumns(Seq("n", "status")))),
-      ("sort by", _ => (), t => t.withRetry(t.compactSortBy(2, "status", "n"))),
-      ("zorder", _ => (), t => t.withRetry(t.compactZOrder(2, "k", "n"))),
+      ("compact", _ => (), t => t.withRetry(t.compact(2))),
+      ("sort by", _ => (),
+        t => t.withRetry(t.compact(2, Some(("sort", Seq("status", "n")))))),
+      ("zorder", _ => (),
+        t => t.withRetry(t.compact(2, Some(("zorder", Seq("k", "n")))))),
       ("zorder n", _ => (),
-        t => t.withRetry(t.compactZOrderN(2, Seq("k", "n", "status")))),
-      ("hilbert", _ => (), t => t.withRetry(t.compactHilbert(2, Seq("k", "n")))),
+        t => t.withRetry(t.compact(2, Some(("zorder", Seq("k", "n", "status")))))),
+      ("hilbert", _ => (),
+        t => t.withRetry(t.compact(2, Some(("hilbert", Seq("k", "n")))))),
+      ("optimize where", _ => (),
+        t => t.withRetry(t.compactWhere(col("k") <= 30L))),
+      ("optimize where sort", _ => (),
+        t => t.withRetry(t.compactWhere(col("k") <= 30L, 0,
+          Some(("sort", Seq("status", "n")))))),
+      ("optimize where zorder", _ => (),
+        t => t.withRetry(t.compactWhere(col("k") <= 30L, 0,
+          Some(("zorder", Seq("k", "n")))))),
+      ("optimize where hilbert", _ => (),
+        t => t.withRetry(t.compactWhere(col("k") <= 30L, 0,
+          Some(("hilbert", Seq("k", "n")))))),
+      ("binpack", _ => (), t => t.withRetry(t.compactBinPack(40L))),
+      ("binpack split", _ => (),
+        t => t.withRetry(t.compactBinPack(10L, 10L, 20L))),
       ("optimize migrate", _.alterPartitioning(Seq("status")),
         t => t.withRetry(t.compactMigrate())),
       ("delete where", _.deleteDeferred(Seq(7L).toDF("k")),
         t => t.withRetry(t.deleteWhere(col("n") === 3))))
+    // every compaction form's committed history row: its operation name
+    // and whether it anchors (whole-table forms) or commits incrementally
+    val committed = Map(
+      "compact" -> ("compact", true),
+      "sort by" -> ("optimize-sortby-status-n", true),
+      "zorder" -> ("optimize-zorder", true),
+      "zorder n" -> ("optimize-zorder-3d", true),
+      "hilbert" -> ("optimize-hilbert-2d", true),
+      "optimize where" -> ("optimize-where", false),
+      "optimize where sort" -> ("optimize-where-sort", false),
+      "optimize where zorder" -> ("optimize-where-zorder", false),
+      "optimize where hilbert" -> ("optimize-where-hilbert", false),
+      "binpack" -> ("optimize-binpack", false),
+      "binpack split" -> ("optimize-binpack", false),
+      "optimize migrate" -> ("optimize-migrate", false))
     verbs.foreach { case (name, prep, verb) =>
       val t = wideTable()
       prep(t)
       val v0 = t.latestVersion
       plantMetadataRacer(t)
       withClue(s"$name: ") { verb(t).version shouldBe v0 + 2 }
+      committed.get(name).foreach { expected =>
+        val r = t.history().filter(col("version") === v0 + 2)
+          .select("operation", "is_anchor").head()
+        withClue(s"$name history: ") {
+          (r.getString(0), r.getBoolean(1)) shouldBe expected
+        }
+      }
       t.onBeforeCommit = () => ()
       t.read().count() should be > 0L
       assertWarmIsCold(t, name)

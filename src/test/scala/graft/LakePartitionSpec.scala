@@ -199,14 +199,14 @@ class LakePartitionSpec extends SparkTestBase {
     val t = mkPartitioned() // p = k % 3, keys globally interleaved
     // z-order on (k, payload-hash) inside each hive dir: layout preserved,
     // every file stays under its partition, reads stay prunable
-    t.compactZOrder(6, "k", "k")
+    t.compact(6, Some(("zorder", Seq("k", "k"))))
     val m = t.manifest(t.latestVersion)
     m.partitionCols shouldBe Seq("p")
     m.files.foreach(_.path should include("p="))
     t.read().count() shouldBe 300L
     scannedPaths(t.read().filter(col("p") === 1L)).foreach(_ should include("/p=1/"))
     // per-partition SORT BY: same layout contract
-    t.compactSortBy(6, "payload")
+    t.compact(6, Some(("sort", Seq("payload"))))
     val m2 = t.manifest(t.latestVersion)
     m2.files.foreach(_.path should include("p="))
     m2.files.foreach(f => f.scols.keySet should contain("payload"))
@@ -275,7 +275,7 @@ class LakePartitionSpec extends SparkTestBase {
       val before = t.read().filter(col("prio") === "1-URGENT")
       before.select(input_file_name()).distinct().count() shouldBe 5L
       // sort-by re-layout: string bounds tighten, the filter prunes
-      t.compactSortBy(5, "prio")
+      t.compact(5, Some(("sort", Seq("prio"))))
       t.manifest(t.latestVersion).operation should startWith("optimize-sortby")
       t.manifest(t.latestVersion).files.foreach(f =>
         f.scols.keySet should contain("prio"))

@@ -135,7 +135,7 @@ class LakePruneRuleSpec extends SparkTestBase {
       val n = 32 // 32×32 grid, 1024 rows, 16 files
       val df = (0L until n * n).map { i => (i % n, i / n, s"cell$i") }
         .toDF("x", "y", "payload")
-        .withColumn("z", ZValue.zvalue(col("x"), col("y")))
+        .withColumn("z", ZValue.zvalueN(Seq(col("x"), col("y"))))
       val t = Lake.create(s, Lake.freshRoot(), df, "z", 16,
         statsCols = Seq("x", "y"))
       // a vertical strip: x ∈ [4,7], every y — the query shape a
@@ -192,7 +192,7 @@ class LakePruneRuleSpec extends SparkTestBase {
       val t = Lake.create(s, Lake.freshRoot(), df, "k", 16)
       val before = scannedFiles(t.read().filter(col("x").between(4L, 7L))).size
       before shouldBe 16 // no x stats, no pruning
-      t.compactZOrder(16, "x", "y")
+      t.compact(16, Some(("zorder", Seq("x", "y"))))
       t.manifest(t.latestVersion).operation shouldBe "optimize-zorder"
       t.manifest(t.latestVersion).statsCols should contain allOf ("x", "y")
       val strip = t.read().filter(col("x").between(4L, 7L))
@@ -283,7 +283,7 @@ class LakePruneRuleSpec extends SparkTestBase {
         .toDF("k", "grp", "payload")
       val t2 = Lake.create(s, Lake.freshRoot(), df2, "k", 3,
         statsCols = Seq("grp"))
-      t2.compactSortBy(3, "grp")
+      t2.compact(3, Some(("sort", Seq("grp"))))
       val q4 = t2.read().filter(col("grp").isin("g0"))
       scannedFiles(q4).size should be < 3
       q4.count() shouldBe 30L

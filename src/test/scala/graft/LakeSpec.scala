@@ -515,7 +515,7 @@ class LakeSpec extends SparkTestBase {
     val t = mkTable()
     t.compact(1)
     t.changes(0, 1).count() shouldBe 0L
-    t.compactZOrder(2, "k", "k")
+    t.compact(2, Some(("zorder", Seq("k", "k"))))
     t.changes(1, 2).count() shouldBe 0L
     t.changes(0, 2).count() shouldBe 0L
     // and a real change through a rewrite chain still surfaces, exactly once
@@ -1321,7 +1321,7 @@ class LakeSpec extends SparkTestBase {
     // binpack and explicit-column layout verbs run too
     t.insertAll(Seq((100L, "tail", 1L)).toDF("id", "msg", "shard"))
     t.compactBinPack(minRows = 5)
-    t.compactSortBy(2, "id")
+    t.compact(2, Some(("sort", Seq("id"))))
     t.read().count() shouldBe 61L
     // shard stats still prune: detail shows stats_cols, files carry bounds
     val m = t.manifest(t.latestVersion)

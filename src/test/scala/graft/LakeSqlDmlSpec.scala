@@ -824,12 +824,15 @@ class LakeSqlDmlSpec extends LakeSqlTestBase {
   }
 
   test("n-column Morton parity and clustering: ZValueN(2) == ZValue") {
+    // 2-D: a's bits at even positions, b's at odd (the 2-column Morton
+    // layout OPTIMIZE ZORDER BY (a, b) clusters on)
     val rnd = new scala.util.Random(7)
     (1 to 200).foreach { _ =>
       val a = rnd.nextLong().abs & 0x7fffffffL
       val b = rnd.nextLong().abs & 0x7fffffffL
       org.apache.spark.sql.graft.ZValue.interleaveN(Array(a, b)) shouldBe
-        org.apache.spark.sql.graft.ZValue.interleave(a, b)
+        (0 until 31).map(i =>
+          (((a >> i) & 1L) << (2 * i)) | (((b >> i) & 1L) << (2 * i + 1))).sum
     }
     // 3-D: bit j of dim i sits at position 3j + i
     val z3 = org.apache.spark.sql.graft.ZValue.interleaveN(Array(1L, 1L, 1L))
@@ -855,7 +858,7 @@ class LakeSqlDmlSpec extends LakeSqlTestBase {
         (i, (i * 7) % 64, (i * 13) % 64, (i * 29) % 64)
       }.toDF("k", "a", "b", "c")
       val t = Lake.create(s, Lake.freshRoot(), df, "k", 8)
-      t.compactZOrderN(8, Seq("a", "b", "c"))
+      t.compact(8, Some(("zorder", Seq("a", "b", "c"))))
       val m = t.manifest(t.latestVersion)
       // every file carries bounds for all three dimensions
       m.files.foreach { f =>

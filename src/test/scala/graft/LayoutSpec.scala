@@ -58,47 +58,6 @@ class LayoutSpec extends SparkTestBase {
     read.select("event_type").distinct().as[String].collect().toSeq shouldBe Seq("click")
   }
 
-  test("compact rewrites a many-file directory into evenly-sized few files") {
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    graft.sources.Tables.documents(spark, sf).repartition(20)
-      .write.parquet(s"$base/in")
-    def parts(d: String) = new java.io.File(d).listFiles()
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    parts(s"$base/in") shouldBe 20
-    val n = Sinks.compact(spark, s"$base/in", s"$base/out",
-      targetBytes = 512L * 1024)
-    parts(s"$base/out") shouldBe n
-    n should be < 20
-    // content-identical after the rewrite
-    spark.read.parquet(s"$base/out").orderBy("doc_id").collect() shouldBe
-      spark.read.parquet(s"$base/in").orderBy("doc_id").collect()
-  }
-
-  test("compactSorted clusters keys: output files cover disjoint ranges") {
-    val base = java.nio.file.Files.createTempDirectory("graft-csort").toString
-    graft.sources.Tables.documents(spark, sf).repartition(10)
-      .write.parquet(s"$base/in")
-    Sinks.compactSorted(spark, s"$base/in", s"$base/out", "doc_id",
-      targetBytes = 16L * 1024)
-    // per-file [min, max] of the cluster key must not overlap — the
-    // property file-level min/max skipping rests on
-    val files = new java.io.File(s"$base/out").listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    files.length should be > 1
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f.getAbsolutePath)
-        .agg(min("doc_id"), max("doc_id")).collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) => hi should be < lo2
-      case _ =>
-    }
-    // content identical
-    spark.read.parquet(s"$base/out").orderBy("doc_id").collect() shouldBe
-      spark.read.parquet(s"$base/in").orderBy("doc_id").collect()
-  }
-
   test("AQE re-plans a sort-merge join to broadcast from runtime statistics") {
     // static planning must NOT see the small size (threshold off), the
     // adaptive re-optimization must (adaptive threshold on): the filtered
@@ -129,18 +88,5 @@ class LayoutSpec extends SparkTestBase {
     } finally prev.foreach { case (k, v) =>
       if (v.nonEmpty) spark.conf.set(k, v) else spark.conf.unset(k)
     }
-  }
-
-  test("ORC roundtrip preserves content and pushes filters to the scan") {
-    val base = java.nio.file.Files.createTempDirectory("graft-orc").toString
-    val docs = graft.sources.Tables.documents(spark, sf)
-    Sinks.writeOrc(docs, s"$base/docs")
-    val back = spark.read.orc(s"$base/docs")
-    back.orderBy("doc_id").collect() shouldBe docs.orderBy("doc_id").collect()
-    // same pushdown contract as parquet
-    val plan = back.filter(col("doc_id") === 7)
-      .queryExecution.executedPlan.toString
-    plan should include ("PushedFilters")
-    plan should include regex "EqualTo\\(doc_id"
   }
 }

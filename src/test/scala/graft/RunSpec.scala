@@ -53,12 +53,17 @@ class RunSpec extends SparkTestBase {
     Run.run(Array("lake-read", cloneRoot, outc))
     spark.read.parquet(outc).count() shouldBe 20L // the restored v0 content
     // sort-clustering and wall-clock time travel through the CLI
-    Run.run(Array("lake-sortby", root, "2", "payload"))
-    // hilbert clustering, metadata-only rename/drop, and a dry-run
-    // vacuum (which must mutate nothing)
-    Run.run(Array("lake-hilbert", root, "2", "k", "k"))
-    Run.run(Array("lake-rename", root, "payload", "note"))
     val t = new graft.sources.LakeTable(spark, root)
+    def lastOperation = t.manifest(t.latestVersion).operation
+    Run.run(Array("lake-sortby", root, "2", "payload"))
+    lastOperation shouldBe "optimize-sortby-payload"
+    // z-order and hilbert clustering, metadata-only rename/drop, and a
+    // dry-run vacuum (which must mutate nothing)
+    Run.run(Array("lake-zorder", root, "2", "k", "k"))
+    lastOperation shouldBe "optimize-zorder"
+    Run.run(Array("lake-hilbert", root, "2", "k", "k"))
+    lastOperation shouldBe "optimize-hilbert-2d"
+    Run.run(Array("lake-rename", root, "payload", "note"))
     t.read().columns should contain("note")
     Run.run(Array("lake-drop-column", root, "note"))
     t.read().columns should not contain "note"

@@ -144,16 +144,4 @@ class SqlSurfaceSpec extends SparkTestBase {
     saltedC shouldBe direct.map(r => Seq(r(0), r(1)))
     saltedS shouldBe direct.map(r => Seq(r(0), r(2)))
   }
-
-  test("salted join equals plain join on a skewed key") {
-    val fact = (1 to 4000)
-      .map(i => (if (i % 4 == 0) "hot" else s"k${i % 13}", i.toLong))
-      .toDF("k", "v")
-    val dim = Seq(("hot", "H"), ("k1", "A"), ("k2", "B")).toDF("k", "attr")
-    val plain = fact.join(dim, "k")
-      .orderBy("k", "v").collect().toSeq.map(_.toSeq)
-    val salted = Skew.saltedJoin(fact, dim, "k", salt = 8)
-      .orderBy("k", "v").collect().toSeq.map(_.toSeq)
-    salted shouldBe plain
-  }
 }

@@ -3,12 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ZValue
 
-import graft.sources.Sinks
-
-/** Z-order clustering (ZValue expression + Sinks.writeZOrdered): Morton
-  * interleave correctness, codegen parity, and the QUANTITATIVE skipping
-  * claim — a box predicate on the second dimension prunes z-ordered files
-  * while pruning nothing under single-column clustering. */
+/** Curve clustering kernels: the Morton interleave (`ZValueN`) against a
+  * naive bit loop and its codegen parity, the Hilbert index's curve
+  * properties, and Hilbert-vs-Morton pruning on a lake table. The 2-D
+  * skipping claim of z-ordered lake files lives in `LakePruneRuleSpec`. */
 class ZOrderSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -28,12 +26,14 @@ class ZOrderSpec extends SparkTestBase {
     val pairs = (for (a <- edges; b <- edges) yield (a, b)) ++
       Seq.fill(500)((rnd.nextLong() & 0x7fffffffL, rnd.nextLong() & 0x7fffffffL))
     pairs.foreach { case (a, b) =>
-      withClue(s"($a,$b): ") { ZValue.interleave(a, b) shouldBe naive(a, b) }
+      withClue(s"($a,$b): ") {
+        ZValue.interleaveN(Array(a, b)) shouldBe naive(a, b)
+      }
     }
     // locality sanity: the z-curve nests quadrants — everything in the
     // low quadrant sorts before anything with a high bit set in either key
-    ZValue.interleave(0x3fffffffL, 0x3fffffffL) should be <
-      ZValue.interleave(0x40000000L, 0L)
+    ZValue.interleaveN(Array(0x3fffffffL, 0x3fffffffL)) should be <
+      ZValue.interleaveN(Array(0x40000000L, 0L))
   }
 
   test("zvalue column: codegen result equals the driver-side interleave") {
@@ -42,54 +42,14 @@ class ZOrderSpec extends SparkTestBase {
     val df = spark.range(2000)
       .select((col("id") % 97).as("a"), (col("id") % 89).as("b"))
     val got = df.select(col("a"), col("b"),
-        ZValue.zvalue(col("a"), col("b")).as("z"))
+        ZValue.zvalueN(Seq(col("a"), col("b"))).as("z"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    got.foreach { case (a, b, z) => z shouldBe ZValue.interleave(a, b) }
+    got.foreach { case (a, b, z) => z shouldBe ZValue.interleaveN(Array(a, b)) }
     // and the expression stays inside whole-stage codegen (the starred
     // operator prefix in the plan print marks the codegen span)
-    val plan = df.select(ZValue.zvalue(col("a"), col("b")))
+    val plan = df.select(ZValue.zvalueN(Seq(col("a"), col("b"))))
       .queryExecution.executedPlan.toString
-    plan should include regex """\*\(\d+\) Project \[graft_zvalue"""
-  }
-
-  test("z-order makes BOTH dimensions' file stats selective; 1-D clustering only one") {
-    // a 200×200 grid: every (a, b) cell once
-    val grid = (0 until 40000).map(i => (i % 200L, i / 200L, i.toLong))
-      .toDF("a", "b", "payload")
-    val zDir = java.nio.file.Files.createTempDirectory("graft-z").toString
-    val aDir = java.nio.file.Files.createTempDirectory("graft-a").toString
-    Sinks.writeZOrdered(grid, zDir, "a", "b", 16)
-    // single-column clustering on `a` (what compactSorted produces)
-    grid.repartitionByRange(16, col("a")).sortWithinPartitions("a")
-      .write.mode("overwrite").parquet(aDir)
-
-    def intersecting(dir: String, boxA: (Long, Long), boxB: (Long, Long)): Int = {
-      val ranges = Sinks.fileRanges(spark, dir, Seq("a", "b"))
-      ranges.count { case (_, Seq((mnA, mxA), (mnB, mxB))) =>
-        mxA >= boxA._1 && mnA <= boxA._2 && mxB >= boxB._1 && mnB <= boxB._2
-      }
-    }
-    val zFilesTotal = Sinks.fileRanges(spark, zDir, Seq("a")).size
-    val aFilesTotal = Sinks.fileRanges(spark, aDir, Seq("a")).size
-
-    // box thin in b, unconstrained in a: a-clustering prunes (almost)
-    // NOTHING — every file that holds ≥1 whole a-value spans all of b;
-    // range-sampling can split an a-value across a boundary file whose
-    // partial b-range then misses the box, so allow that slack instead of
-    // exact equality (observed as a rare full-suite flake) — while
-    // z-ordering must still prune MOST files
-    val zB = intersecting(zDir, (0L, 199L), (48L, 63L))
-    val aB = intersecting(aDir, (0L, 199L), (48L, 63L))
-    aB should be >= (aFilesTotal - 2)
-    zB.toDouble should be <= zFilesTotal / 2.0
-    // box thin in a: both layouts prune (z keeps its 2-D advantage honest)
-    val zA = intersecting(zDir, (48L, 63L), (0L, 199L))
-    zA.toDouble should be <= zFilesTotal / 2.0
-    intersecting(aDir, (48L, 63L), (0L, 199L)) should be <= 3
-
-    // layout changes bytes, never rows: both read back to the same relation
-    spark.read.parquet(zDir).orderBy("payload").collect() shouldBe
-      spark.read.parquet(aDir).orderBy("payload").collect()
+    plan should include regex """\*\(\d+\) Project \[graft_zvalue_n"""
   }
 
   test("hilbert index: bijective on a grid and unit-adjacent along the curve") {
@@ -148,13 +108,13 @@ class ZOrderSpec extends SparkTestBase {
       t.read().filter(col("a") < 16 && col("b") < 16 && col("c") < 16)
         .select(input_file_name()).distinct().count()
     }
-    val hilbertScanned = scannedUnder(_.compactHilbert(8, Seq("a", "b", "c")))
-    val mortonScanned = scannedUnder(_.compactZOrderN(8, Seq("a", "b", "c")))
+    val hilbertScanned = scannedUnder(_.compact(8, Some(("hilbert", Seq("a", "b", "c")))))
+    val mortonScanned = scannedUnder(_.compact(8, Some(("zorder", Seq("a", "b", "c")))))
     hilbertScanned should be <= mortonScanned
     hilbertScanned should be < 8L
     // correctness: the clustered relation answers exactly like the raw one
     val t = Lake.create(spark, Lake.freshRoot(), df, "k", 8)
-    t.compactHilbert(8, Seq("a", "b", "c"))
+    t.compact(8, Some(("hilbert", Seq("a", "b", "c"))))
     t.read().filter(col("a") < 16 && col("b") < 16 && col("c") < 16)
       .count() shouldBe
       df.filter(col("a") < 16 && col("b") < 16 && col("c") < 16).count()
