@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
@@ -32,7 +32,10 @@ object JobProfile {
     val execs = new java.util.concurrent.ConcurrentHashMap[Long, E]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[E]()
     val jobT0 = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
           val ex = E(s.executionId, s.description, System.nanoTime())
@@ -61,7 +64,7 @@ object JobProfile {
       val fn = SparkEntry.queries(lane)
       // pass 1: warm (codegen, page cache) — not profiled
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      execs.clear(); order.clear(); jobT0.clear()
+      execs.clear(); order.clear(); jobT0.clear(); stages.set(0)
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -72,7 +75,8 @@ object JobProfile {
       val es = order.asScala.toSeq.filter(_.t1 > 0)
       val execWall = es.map(e => e.t1 - e.t0).sum / 1e9
       println(f"%nLANE $lane wall=$wall%.2fs execs=${es.size} " +
-        f"execWallSum=$execWall%.2fs jobSum=${es.map(_.jobNs).sum / 1e9}%.2fs")
+        f"execWallSum=$execWall%.2fs jobSum=${es.map(_.jobNs).sum / 1e9}%.2fs " +
+        s"jobs=${jobT0.size} stages=${stages.get}")
       val byDesc = es.groupBy(_.desc).map { case (s, g) =>
         (s, g.size, g.map(e => e.t1 - e.t0).sum / 1e9,
           g.map(_.jobNs).sum / 1e9, g.map(_.nJobs).sum) }

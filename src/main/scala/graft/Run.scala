@@ -170,12 +170,14 @@ object Run {
             s"(kept ${s.keptFiles}, rewrote ${s.rewrittenFiles})")
         case "lake-delete" =>
           need(3)
-          val s = table.delete(spark.read.parquet(args(2)))
+          val keys = spark.read.parquet(args(2))
+          val s = table.withRetry(table.delete(keys))
           println(s"[lake] deleted -> v${s.version} " +
             s"(kept ${s.keptFiles}, rewrote ${s.rewrittenFiles})")
         case "lake-tombstone" =>
           need(3)
-          val s = table.deleteDeferred(spark.read.parquet(args(2)))
+          val keys = spark.read.parquet(args(2))
+          val s = table.withRetry(table.deleteDeferred(keys))
           println(s"[lake] tombstoned -> v${s.version} (zero rewrites)")
         case "lake-read" =>
           need(3)
@@ -210,7 +212,7 @@ object Run {
             s"v${s.version} (${s.addedFiles} files)")
         case "lake-restore" =>
           need(3)
-          val s = table.restore(args(2).toInt)
+          val s = table.withRetry(table.restore(args(2).toInt))
           println(s"[lake] restored v${args(2)} -> v${s.version}")
         case "lake-clone" =>
           need(3)

@@ -4390,11 +4390,13 @@ class LakeTable(spark: SparkSession, val root: String) {
   }
 
   private[sources] def init(df: DataFrame, keyCol: String, numFiles: Int,
-                            statsCols: Seq[String] = Nil,
+                            statsCols0: Seq[String] = Nil,
                             partitionBy: Seq[String] = Nil,
                             estRows: Long = -1L): Unit = {
     partitionBy.foreach(p => require(p != keyCol,
       "partition column cannot be the merge key"))
+    // a repeated stats column would ride every manifest and writer call
+    val statsCols = statsCols0.distinct
     val files = writeDataFiles(df, keyCol, numFiles, statsCols,
       partitionCols = partitionBy, estRows = estRows)
     // stored in READ order: data columns first, partition columns LAST
@@ -4625,15 +4627,23 @@ class LakeTable(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Copy-on-write MERGE of `updates` (same schema as the table) on the
-    * table's key: rows matching an existing key replace it, new keys
-    * insert — [[graft.ops.Relational.upsert]] semantics at the storage
-    * level. Only files whose [min,max] key range intersects an update key
-    * (and, for partitioned tables, whose partition value the updates
-    * touch) are rewritten; everything else carries into the new snapshot
-    * by reference. The previous snapshot remains readable (time travel). */
+  /** Copy-on-write MERGE of `updates` on the table's key: rows matching
+    * an existing key replace it, new keys insert —
+    * [[graft.ops.Relational.upsert]] semantics at the storage level, run
+    * as [[mergeInto]] with no DELETE clause, an unconditional UPDATE SET *
+    * and INSERT *. Only files whose [min,max] key range intersects an
+    * update key (and, for partitioned tables, whose partition value the
+    * updates touch) are rewritten; everything else carries into the new
+    * snapshot by reference. The previous snapshot remains readable (time
+    * travel). Unlike [[mergeInto]], this SET * may EVOLVE the schema:
+    * columns widen, new columns append (every other row reads null), and
+    * a re-added dropped name maps to fresh storage; updates missing a
+    * table column refuse (widen, never narrow). The source must carry one
+    * row per key and no null keys — either refuses before anything
+    * commits. */
   def merge(updates: DataFrame, newFileCountHint: Int = 0): MergeStats =
-    mergeTagged(updates, "merge", newFileCountHint)
+    mergeIntoTagged(updates, "merge", None, None, whenNotMatchedInsert = true,
+      newFileCountHint, evolveSchema = true)
 
   /** Optimistic-retry loop shared by every verb — `t.withRetry(t.merge(df))`
     * runs the verb up to 3 times: an attempt that loses the version race
@@ -4658,24 +4668,21 @@ class LakeTable(spark: SparkSession, val root: String) {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Outstanding-tombstone integration shared by the mutating verbs — the
-    * deletion-vector semantics open table formats apply inside every verb:
-    *
-    *  - rewritten (hit) files PHYSICALLY drop their tombstoned rows (the
-    *    rewrite is the cheapest moment to fold them);
-    *  - keys the verb re-introduces (merge updates / inserts) leave the
-    *    tombstone set, or the read-time anti-join would erase the fresh
-    *    row again. Safe because every file whose range covers such a key
-    *    is in the verb's hit set — the old physical rows are gone.
-    *
-    * Returns (tombstoneAdds, tombstoneRemoves) for the commit.
-    * `reintroduced` is the key set the verb writes fresh rows for (None =
-    * pure delete, tombstones stand). */
-  private def foldTombstones(m: Manifest, reintroduced: Option[DataFrame])
+  /** Outstanding-tombstone integration for MERGE — the deletion-vector
+    * semantics open table formats apply inside every verb: rewritten (hit)
+    * files PHYSICALLY drop their tombstoned rows ([[physical]]), and the
+    * keys the merge re-introduces (`reintroduced`, its source keys) leave
+    * the tombstone set here, or the read-time anti-join would erase the
+    * fresh row again. Safe because every file whose range covers such a
+    * key is in the verb's hit set — the old physical rows are gone.
+    * Returns (tombstoneAdds, tombstoneRemoves) for the commit. */
+  private def foldTombstones(m: Manifest, reintroduced: DataFrame)
       : (Seq[FileEntry], Seq[String]) =
-    (tombstoneKeys(m), reintroduced) match {
-      case (Some(tk), Some(keys)) =>
-        val k = keys.select(col(keys.columns.head).as(m.keyCol)).distinct()
+    tombstoneKeys(m) match {
+      case None => (Nil, Nil)
+      case Some(tk) =>
+        val k = reintroduced.select(col(reintroduced.columns.head).as(m.keyCol))
+          .distinct()
         // no collision → tombstone files carry byte-identically (and the
         // change feed's carried-scan shortcut keeps recognizing them)
         val collides =
@@ -4687,7 +4694,6 @@ class LakeTable(spark: SparkSession, val root: String) {
           // and the table comes out CLEAN
           (writeDataFiles(surviving, m.keyCol, 1), m.tombstones.map(_.path))
         }
-      case _ => (Nil, Nil)
     }
 
   /** [lo, hi] envelope of a file-entry set; (0, -1) = empty (disjoint
@@ -4715,77 +4721,6 @@ class LakeTable(spark: SparkSession, val root: String) {
       math.min(Int.MaxValue.toLong, (estRows + target - 1) / target).toInt)
   }
 
-  private def mergeTagged(updates0: DataFrame, operation: String,
-                          newFileCountHint: Int = 0): MergeStats = {
-    val v = latestVersion
-    // a batch column re-adding a DROPPED name maps to fresh physical
-    // storage BEFORE the logical→physical projection and the schema
-    // widening below — stale pre-drop bytes in carried files never
-    // become the new column's values (the extended map rides the commit)
-    val m0 = manifest(v)
-    requireKeyed(m0, "MERGE")
-    val m = remapReAdded(m0, newLogicalCols(m0, updates0))
-    val keyCol = m.keyCol
-    // callers speak LOGICAL names; files and stats speak physical.
-    // CHECK constraints enforce per row inside the write itself
-    val updates = toPhysical(m, withConstraintChecks(m, updates0, "MERGE"))
-    m.partitionCols.foreach(p => require(updates.columns.contains(p),
-      s"merge updates into a table partitioned by " +
-        s"'${logicalName(m, p)}' must carry that column"))
-    val probeCols = keyCol +: m.partitionCols
-    val probe = updates.select(probeCols.map(col): _*)
-    // one pass for the file-hit probe AND the row count (general path:
-    // the broadcast range join + a separate count)
-    val (hitIdx, updateRows) =
-      fusedProbe(m, probe, keyCol, Seq(count(lit(1)))) match {
-        case Some((hit, row)) => (hit, row.getLong(0))
-        case None => (hitFileIndexes(m, probe), updates.count())
-      }
-    val (hit, kept) = m.files.zipWithIndex.partition { case (_, i) => hitIdx(i) }
-    // schema evolution: widen existing columns against the batch, append
-    // its new ones — recorded in the commit so every read (this version
-    // on) uses the evolved shape while older snapshots keep theirs
-    val newSchemaDdl = m.schemaDdl.map(ddl => Lake.widenSchema(
-      org.apache.spark.sql.types.StructType.fromDDL(ddl),
-      updates.schema, m.partitionCols).toDDL)
-    val rewritten =
-      if (hit.isEmpty) updates
-      else {
-        // mergeSchema + allowMissingColumns: a merge may WIDEN the schema
-        // (schema evolution) — survivors of rewritten files carry null for
-        // columns only the updates have; carried-over files stay untouched
-        // and read back null through the merged-schema scan. Outstanding
-        // deferred deletes fold physically into the rewrite
-        val hitDf = applyTombstones(m, readFiles(m, hit.map(_._1)))
-        // widen, never narrow: updates missing table columns would silently
-        // null them on every updated row (allowMissingColumns fills both
-        // directions) — reject instead, loudly
-        val narrowed = hitDf.columns.toSet -- updates.columns.toSet
-        require(narrowed.isEmpty,
-          s"merge updates are missing table columns ${narrowed.mkString(", ")}: " +
-            "a merge may widen the schema, never narrow it")
-        hitDf.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .unionByName(updates, allowMissingColumns = true)
-      }
-    val hint = if (newFileCountHint > 0) newFileCountHint
-      else sizedFileCount(hit.size, hit.map(_._1.rows).sum + updateRows)
-    val newFiles = writeDataFiles(rewritten, keyCol, hint, m.statsCols,
-      partitionCols = m.partitionCols,
-      estRows = hit.map(_._1.rows).sum + updateRows)
-    // merged keys must leave the tombstone set — their fresh rows would
-    // otherwise be erased by the read-time anti-join
-    val (tAdds, tRemoves) =
-      foldTombstones(m, Some(updates.select(col(keyCol))))
-    // rebase envelope: every update key materializes as a row in the new
-    // files, and every read row came from a hit file — so adds ∪ hit
-    // ranges cover the verb's whole footprint
-    val cv = commitAndIndex(nextDelta(m, operation).copy(adds = newFiles,
-      removes = hit.map(_._1.path), tombstoneAdds = tAdds,
-      tombstoneRemoves = tRemoves, schemaDdl = newSchemaDdl),
-      rebaseEnvelope = Some(() => rangeEnvelope(newFiles ++ hit.map(_._1))))
-    MergeStats(cv, kept.size, hit.size, newFiles.size, updateRows)
-  }
-
   /** Conditional MERGE — the full MERGE INTO clause set, copy-on-write:
     * for each source row whose key matches a target row, the DELETE
     * clause fires first (`whenMatchedDeleteIf`), then the UPDATE clause
@@ -4800,18 +4735,19 @@ class LakeTable(spark: SparkSession, val root: String) {
     * Delta MERGE surface without its parser.
     *
     * `updateSet` picks the UPDATE shape: empty = SET * (full-row replace
-    * from the source; schemas must match exactly — widening belongs to
-    * the unconditional [[merge]]); non-empty = per-column assignments
+    * from the source; column sets must match exactly — schema evolution
+    * belongs to the upsert [[merge]]); non-empty = per-column assignments
     * (`SET c = expr`) evaluated against both struct rows, unassigned
     * columns carrying from the TARGET — so the source may be NARROW: it
     * needs only the key, the partition columns, the assignment inputs,
     * and (when inserts can fire) every table column. Per-column merges
     * never evolve the schema.
     *
-    * COW shape is identical to [[merge]]: only files whose key range (and
-    * partition, if partitioned) the source touches rewrite; the insert
-    * anti-join runs against THOSE files only, which is complete because a
-    * key covered by no file's range exists nowhere in the table. A NOT
+    * COW shape (shared with [[merge]], which runs this core): only files
+    * whose key range (and partition, if partitioned) the source touches
+    * rewrite; the insert anti-join runs against THOSE files only, which is
+    * complete because a key covered by no file's range exists nowhere in
+    * the table. A NOT
     * MATCHED BY SOURCE clause widens the rewrite set to the files holding
     * rows its condition actually FIRES on (found by one column-pruned
     * key+condition scan) — a selective condition keeps the rewrite
@@ -4839,7 +4775,13 @@ class LakeTable(spark: SparkSession, val root: String) {
     * (no null keys, one row per key) and knows the exact source row
     * count: internal callers whose source is literally the output of a
     * groupBy on the merge key (the MV refresh fold) skip the redundant
-    * job. External surfaces always pass -1 and keep the checks. */
+    * job. External surfaces always pass -1 and keep the checks.
+    *
+    * `evolveSchema` marks the upsert's SET * ([[merge]]): the one MERGE
+    * that may evolve the schema — re-added dropped names map to fresh
+    * storage (the extended column map rides the commit), the source may
+    * carry columns the table lacks (they backfill null) but never lack
+    * one of its columns. */
   private def mergeIntoTagged(updates0: DataFrame, operation: String,
                 whenMatchedDeleteIf: Option[org.apache.spark.sql.Column],
                 whenMatchedUpdateIf: Option[org.apache.spark.sql.Column],
@@ -4850,11 +4792,17 @@ class LakeTable(spark: SparkSession, val root: String) {
                 whenNotMatchedBySourceDeleteIf: Option[org.apache.spark.sql.Column] = None,
                 whenNotMatchedBySourceUpdateIf: Option[org.apache.spark.sql.Column] = None,
                 whenNotMatchedBySourceUpdateSet: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-                sourceRowsHint: Long = -1L)
+                sourceRowsHint: Long = -1L,
+                evolveSchema: Boolean = false)
       : MergeStats = {
     val v = latestVersion
-    val m = manifest(v)
-    requireKeyed(m, "MERGE INTO")
+    val m0 = manifest(v)
+    requireKeyed(m0, "MERGE")
+    // a source column re-adding a DROPPED name maps to fresh physical
+    // storage before any logical→physical projection — stale pre-drop
+    // bytes in carried files never become the new column's values
+    val m =
+      if (evolveSchema) remapReAdded(m0, newLogicalCols(m0, updates0)) else m0
     val keyCol = m.keyCol
     // materialize the source ONCE: the verb evaluates it several times
     // (file-hit probe, key checks, clause join, insert anti-join), and an
@@ -4864,7 +4812,7 @@ class LakeTable(spark: SparkSession, val root: String) {
     // is the materializing action — an eager checkpoint would pay a
     // separate job for the same pass
     val updates = updates0.localCheckpoint(false)
-    // the conditional merge is LOGICAL-named end to end (clause
+    // the merge core is LOGICAL-named end to end (clause
     // predicates reference the reader-visible names through the
     // target/source structs); only the file probe and the final write
     // cross into physical names
@@ -4885,10 +4833,10 @@ class LakeTable(spark: SparkSession, val root: String) {
       else Seq(count(lit(1)), count(col(keyCol)), count_distinct(col(keyCol)))
     def requireDiscipline(total: Long, nonNull: Long, distinct: Long): Long = {
       require(nonNull == total,
-        s"conditional merge source carries ${total - nonNull} " +
+        s"merge source carries ${total - nonNull} " +
           "null merge keys: a null key can never match a target row")
       require(distinct == total,
-        "conditional merge requires one source row per key " +
+        "merge requires one source row per key " +
           "(multiple matches make the result order-dependent)")
       total
     }
@@ -4926,7 +4874,7 @@ class LakeTable(spark: SparkSession, val root: String) {
       if (nmbsConds.isEmpty || m.files.isEmpty) keyHitIdx
       else {
         val any = nmbsConds.map(c => coalesce(c, lit(false))).reduce(_ || _)
-        val live = toLogical(m, applyTombstones(m, readFiles(m, m.files)))
+        val live = toLogical(m, physical(m, m.files))
         val affected = live
           .select(col(lk), struct(live.columns.toSeq.map(col): _*).as("target"))
           .filter(any)
@@ -4941,12 +4889,8 @@ class LakeTable(spark: SparkSession, val root: String) {
     // make tombstoned target rows read as ABSENT for clause matching — a
     // tombstoned source key is NOT MATCHED (its row is deleted) and
     // re-inserts fresh
-    val hitDf = if (hit.isEmpty) None
-      else {
-        val h0 = toLogical(m, readFiles(m, hit.map(_._1)))
-        Some(tombstoneKeys(m).fold(h0)(tk =>
-          h0.join(tk.select(col(keyCol).as(lk)), Seq(lk), "left_anti")))
-      }
+    val hitDf =
+      if (hit.isEmpty) None else Some(toLogical(m, physical(m, hit.map(_._1))))
     val perColumn = updateSet.nonEmpty
     // the table's LOGICAL shape: live files if any, else the recorded
     // schema (an emptied table still has one), else the source (legacy)
@@ -4983,7 +4927,14 @@ class LakeTable(spark: SparkSession, val root: String) {
     require(nmbsAssigns.map(_._1).distinct.size == nmbsAssigns.size,
       "NOT MATCHED BY SOURCE UPDATE SET assigns a column more than once")
     if (!perColumn) hitDf.foreach { h =>
-      require(h.columns.sorted.sameElements(updates.columns.sorted),
+      if (evolveSchema) {
+        // widen, never narrow: a source missing table columns would null
+        // them on every updated row (allowMissingColumns fills both ways)
+        val narrowed = h.columns.toSet -- updates.columns.toSet
+        require(narrowed.isEmpty,
+          s"merge updates are missing table columns ${narrowed.mkString(", ")}: " +
+            "a merge may widen the schema, never narrow it")
+      } else require(h.columns.sorted.sameElements(updates.columns.sorted),
         "conditional merge requires identical schemas " +
           "(schema evolution belongs to the unconditional merge)")
     } else if (whenNotMatchedInsert) {
@@ -4992,6 +4943,13 @@ class LakeTable(spark: SparkSession, val root: String) {
         "per-column MERGE with an INSERT clause needs every table column " +
           s"in the source; missing ${missing.mkString(", ")}")
     }
+    // per-column merges never evolve the schema; SET * may widen it —
+    // an incompatible type change refuses here, before any write
+    val commitSchemaDdl =
+      if (perColumn) m.schemaDdl
+      else m.schemaDdl.map(ddl => Lake.widenSchema(
+        org.apache.spark.sql.types.StructType.fromDDL(ddl),
+        toPhysical(m, updates).schema, m.partitionCols).toDDL)
     // INSERT-clause filter: the predicate sees the source row as a
     // `source` struct (the unmatched row has no target half)
     def insertFilter(df: DataFrame): DataFrame = whenNotMatchedInsertIf match {
@@ -5048,7 +5006,7 @@ class LakeTable(spark: SparkSession, val root: String) {
         // whole table at add time)
         val updatedRows = withConstraintChecks(m,
           joined.filter(matched && !del && upd).select(
-          (if (!perColumn) cols.map(c => col(s"source.$c").as(c))
+          (if (!perColumn) updates.columns.toSeq.map(c => col(s"source.$c").as(c))
            else cols.map(c => assignMap.get(c) match {
              // per-column: assigned columns evaluate against BOTH struct
              // rows (cast to the recorded type); the rest carry from the
@@ -5061,11 +5019,12 @@ class LakeTable(spark: SparkSession, val root: String) {
             val unmatched = insertFilter(
               updates.join(h.select(col(lk)), Seq(lk), "left_anti"))
             withConstraintChecks(m,
-              if (perColumn) castSelect(unmatched)
-              else unmatched.select(cols.map(col): _*), "MERGE")
+              if (perColumn) castSelect(unmatched) else unmatched, "MERGE")
           } else h.limit(0).select(cols.map(col): _*)
-        keptRows.unionByName(updatedRows).unionByName(nmbsUpdatedRows)
-          .unionByName(inserts)
+        // SET * / INSERT * rows carry the SOURCE's columns: under schema
+        // evolution the target-shaped rows backfill the new ones with null
+        Seq(updatedRows, nmbsUpdatedRows, inserts).foldLeft(keptRows)(
+          _.unionByName(_, allowMissingColumns = true))
     }
     val hint = if (newFileCountHint > 0) newFileCountHint
       else sizedFileCount(hit.size, hit.map(_._1.rows).sum + updateRows)
@@ -5075,14 +5034,7 @@ class LakeTable(spark: SparkSession, val root: String) {
     // source keys leave the tombstone set: matched-updated and inserted
     // keys get fresh rows; delete-claused and no-insert keys have had
     // their physical rows dropped by the rewrite either way
-    val (tAdds, tRemoves) =
-      foldTombstones(m, Some(updates.select(col(lk))))
-    // per-column merges never evolve the schema; SET * may widen it
-    val commitSchemaDdl =
-      if (perColumn) m.schemaDdl
-      else m.schemaDdl.map(ddl => Lake.widenSchema(
-        org.apache.spark.sql.types.StructType.fromDDL(ddl),
-        toPhysical(m, updates).schema, m.partitionCols).toDDL)
+    val (tAdds, tRemoves) = foldTombstones(m, updates.select(col(lk)))
     // rebase envelope: with an unconditional INSERT clause, source keys
     // all materialize in adds (update/insert) or fall inside hit-file
     // ranges (delete-claused / carried) — adds ∪ hit covers the
@@ -5173,9 +5125,7 @@ class LakeTable(spark: SparkSession, val root: String) {
         (h, k, if (h.isEmpty) 0L else snap.filter(condition).count())
       }
     if (hit.isEmpty) return MergeStats(v, m.files.size, 0, 0, 0L)
-    val hitDf0 = toLogical(m, readFiles(m, hit))
-    val hitDf = tombstoneKeys(m).fold(hitDf0)(tk =>
-      hitDf0.join(tk.select(col(keyCol).as(lk)), Seq(lk), "left_anti"))
+    val hitDf = toLogical(m, physical(m, hit))
     require(sets1.map(_._1).distinct.size == sets1.size,
       "UPDATE assigns a column more than once")
     // one simultaneous projection: every RHS evaluates against the OLD
@@ -5348,11 +5298,13 @@ class LakeTable(spark: SparkSession, val root: String) {
     * (appId, epoch id); a replay after a restart-between-write-and-offset-
     * commit becomes a no-op instead of a duplicate snapshot. Pass the
     * checkpoint/query identity as `appId` whenever more than one writer
-    * (or more than one checkpoint generation) can touch the table. */
+    * (or more than one checkpoint generation) can touch the table. Same
+    * source contract as [[merge]]: one row per key, no null keys. */
   def mergeEpoch(updates: DataFrame, epochId: Long,
                  appId: String = ""): Option[MergeStats] =
     if (hasEpoch(epochId, appId)) None
-    else Some(mergeTagged(updates, epochTag(epochId, appId)))
+    else Some(mergeIntoTagged(updates, epochTag(epochId, appId), None, None,
+      whenNotMatchedInsert = true, evolveSchema = true))
 
   /** COMPLETE-mode streaming fold, epoch-tagged: the batch IS the whole
     * intended table content (a complete-mode aggregation re-emits every

@@ -269,18 +269,17 @@ private[sources] class LakeProjectedRelation(
 }
 
 /** The V1 sink behind `writeStream.format("graft-lake")` — one
-  * [[LakeTable.mergeEpoch]] per micro-batch. The incoming DataFrame is
-  * the streaming plan; it re-plans as a batch frame and MATERIALIZES
-  * once (localCheckpoint) because the merge consumes its source from
-  * several operators and a streaming batch must not re-execute. */
+  * [[LakeTable.mergeEpoch]] (or `replaceAllEpoch` / `insertEpoch`) per
+  * micro-batch. The incoming DataFrame is the streaming plan; it
+  * re-plans as a batch frame, and each verb materializes its source
+  * once itself, so a streaming batch never re-executes. */
 private[sources] class LakeMergeSink(root: String, appId: String,
                                       insertOnly: Boolean = false,
                                       replaceAll: Boolean = false)
     extends Sink {
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val spark = data.sparkSession
-    val batch = org.apache.spark.sql.graft.StreamBridge
-      .batchDataFrame(data).localCheckpoint()
+    val batch = org.apache.spark.sql.graft.StreamBridge.batchDataFrame(data)
     val t = new LakeTable(spark, root)
     if (replaceAll) t.replaceAllEpoch(batch, batchId, appId)
     else if (insertOnly) t.insertEpoch(batch, batchId, appId)

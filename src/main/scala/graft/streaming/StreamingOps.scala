@@ -334,10 +334,11 @@ object StreamingOps {
     * `merge-epoch-N`), so a batch REPLAYED after a restart between the
     * table write and the offset commit finds its own epoch already
     * committed and no-ops — exactly-once table content without a
-    * format-level transaction API. CDC-shaped input (several updates for
-    * one key inside a batch) should be compacted to latest-per-key
-    * upstream ([[graft.ops.Relational.latestByKey]]) — MERGE semantics
-    * are per-batch single-row-per-key, as in every table format. */
+    * format-level transaction API. MERGE semantics are per-batch
+    * single-row-per-key, as in every table format: a batch carrying
+    * several rows for one key (or a null key) fails the query and
+    * commits nothing, so CDC-shaped input must be compacted to
+    * latest-per-key upstream ([[graft.ops.Relational.latestByKey]]). */
   def mergeIntoLake(updates: DataFrame, table: graft.sources.LakeTable,
                     checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     // epoch tags are qualified by the CHECKPOINT identity (the txnAppId

@@ -2123,10 +2123,8 @@ case class LakeOptimizeCommand(root: String, files: Option[Int],
     GraftSqlParser.statsRow(whereSql match {
       case Some(w) => t.withRetry(
         t.compactWhere(GraftSqlParser.exprCol(w), files.getOrElse(0), layout))
-      case None =>
-        val n = files.getOrElse(
-          math.max(1, t.manifest(t.latestVersion).files.size))
-        t.withRetry(t.compact(n, layout))
+      case None => t.withRetry(t.compact(files.getOrElse(
+        math.max(1, t.manifest(t.latestVersion).files.size)), layout))
     })
   }
 }

@@ -30,6 +30,9 @@ class LakeSpec extends SparkTestBase {
     ranges.head._1 shouldBe 1L
     ranges.last._2 shouldBe 90L
     ranges.sliding(2).foreach { case Seq((_, hi), (lo, _)) => lo should be > hi }
+    // a repeated stats column is stored once, not carried into every manifest
+    Lake.create(spark, Lake.freshRoot(), t.read(), "k", 3,
+      statsCols = Seq("status", "status")).manifest(0).statsCols shouldBe Seq("status")
   }
 
   test("COW merge equals the in-memory upsert; previous snapshot still readable") {
@@ -651,6 +654,12 @@ class LakeSpec extends SparkTestBase {
       t.mergeInto(Seq((9L, "A", "X", "EXTRA"))
         .toDF("k", "payload", "status", "channel"))
     }
+    // the upsert refuses duplicate source keys the same way
+    intercept[IllegalArgumentException] {
+      t.merge(Seq((9L, "A", "X"), (9L, "B", "Y"))
+        .toDF("k", "payload", "status"))
+    }
+    t.latestVersion shouldBe 1
     // time travel still sees the pre-merge state
     t.snapshot(0).count() shouldBe 90L
   }
@@ -670,29 +679,36 @@ class LakeSpec extends SparkTestBase {
     val t = mkTable()
     val src = Seq((Some(5L), "OK", "U"), (None, "NULLKEY", "U"))
       .toDF("k", "payload", "status")
-    val e = intercept[IllegalArgumentException] {
-      t.mergeInto(src)
-    }
-    e.getMessage should include("null merge keys")
-    t.latestVersion shouldBe 0 // nothing committed
+    val verbs = Seq[(String, graft.sources.LakeTable => Any)](
+      "mergeInto" -> (_.mergeInto(src)), "merge" -> (_.merge(src)),
+      "mergeEpoch" -> (_.mergeEpoch(src, 0L)))
+    verbs.foreach { case (name, verb) => withClue(s"$name: ") {
+      val e = intercept[IllegalArgumentException] { verb(t) }
+      e.getMessage should include("null merge keys")
+      t.latestVersion shouldBe 0 // nothing committed
+    } }
   }
 
   test("mergeInto evaluates its source exactly once (materialization barrier)") {
-    val t = mkTable()
-    val evals = spark.sparkContext.longAccumulator("src-evals")
-    val bump = udf { (k: Long) => evals.add(1L); k }
-    val src = Seq((5L, "U5", "U"), (35L, "U35", "U"), (95L, "I95", "U"))
-      .toDF("k", "payload", "status")
-      .withColumn("k", bump(col("k")))
-    t.mergeInto(src)
-    // the verb consumes the source from several operators (hit probe, key
-    // checks, clause join, insert anti-join); without the localCheckpoint
-    // barrier each consumer would re-run the source plan and the
-    // accumulator would read a multiple of 3
-    evals.value shouldBe 3L
-    rows(t.read().filter(col("k").isin(5L, 35L, 95L))
-      .select("k", "payload").orderBy("k")) shouldBe
-      Seq(Seq(5L, "U5"), Seq(35L, "U35"), Seq(95L, "I95"))
+    val verbs = Seq[(String, (graft.sources.LakeTable, org.apache.spark.sql.DataFrame) => Any)](
+      "mergeInto" -> (_.mergeInto(_)), "merge" -> (_.merge(_)))
+    verbs.foreach { case (name, verb) => withClue(s"$name: ") {
+      val t = mkTable()
+      val evals = spark.sparkContext.longAccumulator("src-evals")
+      val bump = udf { (k: Long) => evals.add(1L); k }
+      val src = Seq((5L, "U5", "U"), (35L, "U35", "U"), (95L, "I95", "U"))
+        .toDF("k", "payload", "status")
+        .withColumn("k", bump(col("k")))
+      verb(t, src)
+      // the verb consumes the source from several operators (hit probe, key
+      // checks, clause join, insert anti-join); without the localCheckpoint
+      // barrier each consumer would re-run the source plan and the
+      // accumulator would read a multiple of 3
+      evals.value shouldBe 3L
+      rows(t.read().filter(col("k").isin(5L, 35L, 95L))
+        .select("k", "payload").orderBy("k")) shouldBe
+        Seq(Seq(5L, "U5"), Seq(35L, "U35"), Seq(95L, "I95"))
+    } }
   }
   test("disjoint-commit fast path: range-disjoint racers commit without replay") {
     val t = mkTable() // files 1-30, 31-60, 61-90
