@@ -43,14 +43,20 @@ object Jsonl {
     * parallelism, but the corrupt capture is an ordinary column, so
     * quarantine queries that touch ONLY the capture column stay legal
     * (the raw JSON source forbids them — QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-    * and the parse participates in whole-stage codegen with the scan. */
+    * and the parse participates in whole-stage codegen with the scan.
+    *
+    * The parse is the generator of a one-element `explode`, so a query
+    * over the result (a [[quarantine]] side, a filter on a field) plans
+    * one `from_json`: a filter pushed below a Project would inline the
+    * aliased parse, while predicates on a Generate's output stay above
+    * it. Every non-blank line still yields exactly one row. */
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     val withCapture = schema.add(StructField(CorruptCol, StringType))
     spark.read.text(path)
       .filter(length(trim(col("value"))) > 0)
-      .select(from_json(col("value"), withCapture,
+      .select(explode(array(from_json(col("value"), withCapture,
         Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)
-      ).as("r"))
+      ))).as("r"))
       .select(col("r.*"))
   }
 

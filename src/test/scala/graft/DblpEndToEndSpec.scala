@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.XmlToStructs
+
 import graft.model.Dblp
 import graft.queries.DblpQueries
 import graft.sources.Sinks
@@ -24,6 +26,22 @@ class DblpEndToEndSpec extends SparkTestBase {
       Seq("TODS", "Alice", 3L), Seq("TODS", "Bob", 1L),
       Seq("VLDB", "Frank", 1L),               // editor fallback
       Seq("homepages/x/Alice", "Alice", 1L))  // www key-prefix venue
+  }
+
+  test("each of t1–t6 parses a line once: one XmlToStructs per optimized plan") {
+    // plan-only: a filter pushed below the parse must not inline another
+    // copy of from_xml (clean(...), size(authors), explode's inferred
+    // filters), so every query plan holds exactly the one parse
+    val pubs = Dblp.readLineXml(spark, fixturePath)
+    val plans = Seq(
+      "t1" -> DblpQueries.t1TopAuthorsPerVenue(pubs),
+      "t2" -> DblpQueries.t2ConsecutiveYears(pubs),
+      "t3" -> DblpQueries.t3SoloTitlesPerVenue(pubs),
+      "t4" -> DblpQueries.t4MaxAuthorPubsPerVenue(pubs),
+      "t5" -> DblpQueries.t5TopCoauthorAuthors(pubs),
+      "t6" -> DblpQueries.t6TopSoloAuthors(pubs))
+    plans.map { case (name, df) => name -> optimizedExprCount[XmlToStructs](df) } shouldBe
+      plans.map { case (name, _) => name -> 1 }
   }
 
   test("t2 finds Alice's 3-year streak; no-year record dropped") {

@@ -67,11 +67,16 @@ class DblpModelSpec extends SparkTestBase {
   }
 
   test("malformed XML lines survive as null-field rows (PERMISSIVE), filtered by garbage guards") {
-    val bad = Dblp.normalize(Seq(
+    val lines = Seq(
       "<article key=\"ok/1\"><author>A</author><title>T</title><journal>J</journal><year>2000</year></article>",
       "not xml at all",
-      "<article key=\"broken/2\"><author>Unclosed").toDF("value"))
-    bad.count() shouldBe 3L // nothing thrown, nothing silently dropped
+      "<article key=\"broken/2\"><author>Unclosed",
+      "").toDF("value")
+    val bad = Dblp.normalize(lines)
+    // nothing thrown, nothing silently dropped: one row per line, the
+    // blank one included, with or without the entity pass
+    bad.count() shouldBe 4L
+    Dblp.normalize(lines, expandEntities = true).count() shouldBe 4L
     // non-XML gets venue "No venue available" (reference parity) but empty
     // authors; the unclosed record parses to all-null fields — the combined
     // venue+author garbage guards drop both junk rows

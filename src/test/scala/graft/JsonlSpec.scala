@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Jsonl, Tables}
@@ -37,9 +38,20 @@ class JsonlSpec extends SparkTestBase {
     good.count() shouldBe 2L
     rows(good.select("doc_id").orderBy("doc_id")) shouldBe Seq(Seq(1L), Seq(2L))
     val badLines = bad.collect().map(_.getString(0)).toSeq
-    badLines should have size 2
-    badLines should contain("this is not json at all")
+    // each malformed line reaches the bad side once, with its raw text
+    badLines.sorted shouldBe Seq("this is not json at all", "{\"doc_id\": 3, \"text\": \"truncated")
     // schema of good side carries no capture column
     good.columns should not contain Jsonl.CorruptCol
+  }
+
+  test("read and both quarantine sides parse a line once: one JsonToStructs per plan") {
+    // plan-only: a filter on a parsed field must not inline another copy
+    // of from_json below the parse
+    val dir = Files.createTempDirectory("graft-jsonl-plan")
+    Files.writeString(dir.resolve("part-0.jsonl"), "{\"doc_id\": 1}\n")
+    val df = Jsonl.read(spark, dir.toString, Jsonl.DocumentsSchema)
+    val (good, bad) = Jsonl.quarantine(df)
+    Seq(df, good, bad, df.filter(col("lang") === "en"))
+      .map(optimizedExprCount[JsonToStructs](_)) shouldBe Seq(1, 1, 1, 1)
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -13,6 +16,13 @@ trait SparkTestBase extends AnyFunSuite with Matchers {
   /** Rows of a small result, fully collected and listed for assertion. */
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** `T` expressions in the optimized plan, subqueries included; plans
+    * only, runs no job. */
+  def optimizedExprCount[T <: Expression](df: DataFrame)(implicit t: ClassTag[T]): Int =
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case p => p.expressions.map(_.collect { case e if t.runtimeClass.isInstance(e) => e }.size).sum
+    }.sum
 }
 
 object SparkTestBase {
