@@ -4204,7 +4204,11 @@ class LakeTable(spark: SparkSession, val root: String) {
     fs.delete(scratch, true)
     // degenerate STRING-key bounds warn AT WRITE (creation and full
     // compacts are where a bad key scheme should surface) — shared by
-    // the footer and scan stats paths
+    // the footer and scan stats paths: a batch whose every key shares one
+    // 8-byte prefix writes bounds that cannot discriminate any of its
+    // files, so keyed probes against them go O(batch) per probe. The
+    // durable table-wide signal is `graft_lake_detail(...)` / DESCRIBE's
+    // key_bounds_health column.
     def warnDegenerateStringKey(entries: Seq[FileEntry]): Unit =
       if (keyCol.nonEmpty &&
           df.schema(keyCol).dataType == org.apache.spark.sql.types.StringType &&
@@ -4320,20 +4324,7 @@ class LakeTable(spark: SparkSession, val root: String) {
           case None => fs.delete(p, false); None
         }
       }
-      // degenerate STRING-key bounds warn AT WRITE (creation and full
-      // compacts are where a bad key scheme should surface): a batch
-      // whose every key shares one 8-byte prefix writes bounds that
-      // cannot discriminate any of its files — keyed probes against
-      // them go O(batch) per probe. The durable table-wide signal is
-      // `graft_lake_detail(...)` / DESCRIBE's key_bounds_health column.
-      if (keyIsString && entries.size > 1 &&
-          entries.map(_.minKey).min == entries.map(_.maxKey).max)
-        org.slf4j.LoggerFactory.getLogger(classOf[LakeTable]).warn(
-          s"lake table $root: all ${entries.size} files written by this " +
-            "commit share ONE 8-byte key prefix — the embedding bounds " +
-            "cannot discriminate them (key probes will intersect every " +
-            "file); hash-bucket or reverse-host the key scheme, or " +
-            "declare a discriminating stats column")
+      warnDegenerateStringKey(entries)
       // bloom maintenance: declared index columns get per-file blooms for
       // the NEW files in this same write path (one extra pass over just-
       // written bytes) — files predating the declaration stay uncovered
@@ -4464,7 +4455,7 @@ class LakeTable(spark: SparkSession, val root: String) {
           "bounds, then retry")
   }
 
-  /** The keyless twin of [[hitFileIndexes]]: file names (basenames) of
+  /** The keyless half of [[hitKeptFiles]]: file names (basenames) of
     * `m`'s data files holding at least one row matching `condition`
     * (LOGICAL names) — ONE scan, column-pruned to the predicate's
     * columns, tagging rows with their source file. Parquet row-group
@@ -4483,48 +4474,87 @@ class LakeTable(spark: SparkSession, val root: String) {
 
   /** The (hit, kept) file partition for a predicate — the ONE selection
     * primitive behind every predicate-scoped verb (UPDATE/DELETE WHERE,
-    * OPTIMIZE … WHERE, ANALYZE … WHERE): keyed tables derive the
-    * matching rows' key+partition probe and range-test the manifest
-    * ([[hitFileIndexes]], verify-fallback included); keyless tables
-    * scan by file identity ([[hitFilesByScan]]). Hit = may hold a
-    * matching row; kept files carry by reference. */
+    * OPTIMIZE … WHERE, ANALYZE … WHERE): keyed tables probe the matching
+    * rows' key+partition columns against the manifest ([[probeFiles]],
+    * verify-fallback included); keyless tables scan by file identity
+    * ([[hitFilesByScan]]). Hit = may hold a matching row; kept files
+    * carry by reference. The thunk yields the `extra` aggregates over
+    * the matching rows, computed on first call where the probe did not
+    * already. On keyed tables the probe carries only the key and
+    * partition columns, so `extra` may reference no others (a row count
+    * is what callers ask for). */
   private def hitKeptFiles(m: Manifest,
-                           condition: org.apache.spark.sql.Column)
-      : (Seq[FileEntry], Seq[FileEntry]) =
+                           condition: org.apache.spark.sql.Column,
+                           extra: Seq[org.apache.spark.sql.Column] = Nil)
+      : (Seq[FileEntry], Seq[FileEntry], () => org.apache.spark.sql.Row) = {
+    val matching = toLogical(m, physical(m, m.files)).filter(condition)
     if (m.keyCol.nonEmpty) {
       val probeColsL = (m.keyCol +: m.partitionCols).map(logicalName(m, _))
-      val keys = toPhysical(m,
-        read().filter(condition).select(probeColsL.map(col): _*))
-      val hitIdx = fusedProbe(m, keys, m.keyCol, Seq.empty) match {
-        case Some((hitF, _)) => hitF
-        case None => hitFileIndexes(m, keys)
-      }
+      val keys = toPhysical(m, matching.select(probeColsL.map(col): _*))
+      // with extras, the matching keys are checkpointed lazily: the
+      // probe's pass materializes them, and the range join's separate
+      // extra aggregate reads the cached blocks instead of re-scanning
+      // the table for the predicate
+      val (hitIdx, extras) = probeFiles(m,
+        if (extra.isEmpty) keys else keys.localCheckpoint(false), extra)
       val (h, k) = m.files.zipWithIndex.partition { case (_, i) => hitIdx(i) }
-      (h.map(_._1), k.map(_._1))
+      (h.map(_._1), k.map(_._1), extras)
     } else {
       val hitNames = hitFilesByScan(m, condition)
-      m.files.partition(f => hitNames.contains(new Path(f.path).getName))
+      lazy val extraRow = matching.agg(extra.head, extra.tail: _*).collect()(0)
+      val (h, k) = m.files.partition(f => hitNames.contains(new Path(f.path).getName))
+      (h, k, () => extraRow)
     }
+  }
 
-  /** File pruning shared by MERGE and DELETE: a key hits a file iff it
-    * falls in the file's [min,max] — ranges are metadata-sized and
-    * broadcast, so the probe shuffles only the distinct key column.
-    * When the table is hive-partitioned AND the probe relation carries the
-    * partition column (merge updates do; bare delete keys don't), the hit
-    * test also requires the file's partition value to match — key ranges
-    * overlap ACROSS partitions by construction, so this is what keeps a
-    * single-partition merge from rewriting every partition's files. */
-  private def hitFileIndexes(m: Manifest, keys: DataFrame): Set[Int] = {
+  /** File count past which the fused aggregate of [[probeFiles]] gives
+    * way to its broadcast range join: each manifested file adds one
+    * conditional-max aggregate column, and past a couple hundred the
+    * single generated aggregate stops being the cheap path. */
+  private val FusedProbeMaxFiles = 128
+
+  /** The file-hit probe behind every keyed verb: the indexes of `m`'s
+    * files that may hold a row of `probe` (whose FIRST column is the key
+    * in the table's key domain), plus the `extra` aggregates over `probe`
+    * (source-discipline checks, row counts, rebase-envelope bounds).
+    *
+    * A key hits a file iff it falls in the file's [min,max]. When the
+    * table is hive-partitioned AND the probe carries partition columns
+    * (merge updates do; bare delete keys don't), the hit test also
+    * requires the file's partition value to match — key ranges overlap
+    * ACROSS partitions by construction, so this is what keeps a
+    * single-partition merge from rewriting every partition's files.
+    *
+    * Unpartitioned tables of at most [[FusedProbeMaxFiles]] files answer
+    * in ONE aggregate pass: a per-file `max(when(key between [min,max],
+    * 1))` flag beside `extra`. Otherwise the ranges are metadata-sized and
+    * broadcast, the probe shuffles only its distinct key (+ partition)
+    * columns, and `extra` runs as its own aggregate over `probe` on the
+    * first call of the returned thunk — a caller that never reads it
+    * never pays for it. */
+  private def probeFiles(m: Manifest, probe: DataFrame,
+                         extra: Seq[org.apache.spark.sql.Column] = Nil)
+      : (Set[Int], () => org.apache.spark.sql.Row) = {
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+    if (m.partitionCols.isEmpty && m.files.nonEmpty &&
+        m.files.size <= FusedProbeMaxFiles) {
+      val k = Lake.statLong(probe, probe.columns.head)
+      val aggs = extra ++ m.files.zipWithIndex.map { case (f, i) =>
+        max(when(k >= f.minKey && k <= f.maxKey, lit(1))).as(s"_hit_$i") }
+      val row = probe.agg(aggs.head, aggs.tail: _*).collect()(0)
+      return (m.files.indices.filter(i => !row.isNullAt(extra.size + i)).toSet,
+        () => row)
+    }
+    lazy val extraRow = probe.agg(extra.head, extra.tail: _*).collect()(0)
     // numeric/date/timestamp partition columns constrain through the Long
     // stat units; STRING partition columns constrain through their exact
     // scols bounds; anything else (or a string value whose stats were
     // dropped — non-ASCII) must NOT constrain: an unprobeable column
-    // falling out silently would make hitIdx empty and turn a merge into
-    // blind duplicate inserts
+    // falling out silently would make the hit set empty and turn a merge
+    // into blind duplicate inserts
     val (strPcols, numPcols) = m.partitionCols
-      .filter(keys.columns.contains)
-      .partition(p => keys.schema(p).dataType == StringType)
+      .filter(probe.columns.contains)
+      .partition(p => probe.schema(p).dataType == StringType)
     val schema = StructType(
       Seq(StructField("fidx", IntegerType), StructField("mn", LongType),
         StructField("mx", LongType)) ++
@@ -4550,81 +4580,46 @@ class LakeTable(spark: SparkSession, val root: String) {
     }
     import scala.jdk.CollectionConverters._
     val rangesDf = spark.createDataFrame(rangeRows.asJava, schema)
-    val probe = keys.select(
-      (Lake.statLong(keys, keys.columns.head).as("k") +:
-        (numPcols.map(p => Lake.statLong(keys, p).as(s"pv_$p")) ++
+    val keys = probe.select(
+      (Lake.statLong(probe, probe.columns.head).as("k") +:
+        (numPcols.map(p => Lake.statLong(probe, p).as(s"pv_$p")) ++
           strPcols.map(p => col(p).as(s"sv_$p")))): _*).distinct()
-    val numCond = numPcols.foldLeft(
-      col("k") >= col("mn") && col("k") <= col("mx")) { (c, p) =>
+    val numCond = numPcols.foldLeft(lit(true)) { (c, p) =>
       c && col(s"pv_$p") >= col(s"pmn_$p") && col(s"pv_$p") <= col(s"pmx_$p")
     }
-    val cond = strPcols.foldLeft(numCond) { (c, p) =>
+    val partCond = strPcols.foldLeft(numCond) { (c, p) =>
       c && (col(s"smn_$p").isNull ||
         (col(s"sv_$p") >= col(s"smn_$p") && col(s"sv_$p") <= col(s"smx_$p")))
     }
-    val hit = probe.join(broadcast(rangesDf), cond)
-      .select("fidx").distinct().collect().map(_.getInt(0)).toSet
-    if (numPcols.isEmpty && strPcols.isEmpty) hit
-    else {
-      // A key whose update row carries a NEW partition value still has its
-      // OLD row in a file of the old partition — partition-constrained
-      // probing alone would miss that file and the merge would insert a
-      // silent duplicate. Candidates are files key-range-hit but
-      // partition-missed; verify by scanning ONLY their key column (a
-      // metadata-cheap columnar read) and join in the files that actually
-      // hold an update key. No partition movement → no candidates contain
-      // the keys → the common case stays tight.
-      val keyHit = probe.join(broadcast(rangesDf),
-          col("k") >= col("mn") && col("k") <= col("mx"))
-        .select("fidx").distinct().collect().map(_.getInt(0)).toSet
-      val candidates = (keyHit -- hit).toSeq.sorted
-      if (candidates.isEmpty) hit
+    // ONE collect: every key-range-hit file, flagged when some probe row
+    // also matches its partition values
+    val (hitRows, keyOnly) = keys.join(broadcast(rangesDf),
+        col("k") >= col("mn") && col("k") <= col("mx"))
+      .groupBy("fidx").agg(max(when(partCond, lit(1))))
+      .collect().partition(r => !r.isNullAt(1))
+    val hit = hitRows.map(_.getInt(0)).toSet
+    // A key whose update row carries a NEW partition value still has its
+    // OLD row in a file of the old partition — partition-constrained
+    // probing alone would miss that file and the merge would insert a
+    // silent duplicate. Candidates are files key-range-hit but
+    // partition-missed; verify by scanning ONLY their key column (a
+    // metadata-cheap columnar read) and join in the files that actually
+    // hold a probe key. No partition movement → no candidates contain
+    // the keys → the common case stays tight.
+    val candidates = keyOnly.map(_.getInt(0)).toSeq.sorted
+    val moved =
+      if (candidates.isEmpty) Nil
       else {
         val candDf = readFiles(m, candidates.map(m.files))
         val present = candDf
           .select(input_file_name().as("_f"),
             Lake.statLong(candDf, m.keyCol).as("k"))
-          .join(probe.select("k").distinct(), Seq("k"), "left_semi")
+          .join(keys.select("k").distinct(), Seq("k"), "left_semi")
           .select("_f").distinct().collect()
           .map(r => new Path(r.getString(0)).getName).toSet
-        hit ++ candidates.filter(i =>
-          present.contains(new Path(m.files(i).path).getName))
+        candidates.filter(i => present.contains(new Path(m.files(i).path).getName))
       }
-    }
-  }
-
-  /** File count past which the fused probe declines: each manifested
-    * file adds one conditional-max aggregate column, and past a couple
-    * hundred the single generated aggregate stops being the cheap path
-    * (the broadcast range join in [[hitFileIndexes]] scales instead). */
-  private val FusedProbeMaxFiles = 128
-
-  /** FUSED file-hit probe for UNPARTITIONED keyed relations: ONE
-    * aggregate pass over the probe relation computes a per-file hit flag
-    * (`max(when(key between [min,max], 1))` — exactly [[hitFileIndexes]]'s
-    * range test, which for unpartitioned tables is the whole test) plus
-    * any caller-supplied aggregate columns (source-discipline checks, row
-    * counts, rebase envelopes) — replacing a distinct + broadcast-join +
-    * collect execution AND the caller's separate aggregate execution with
-    * one job. Returns None (caller takes the general path) for
-    * partitioned or empty tables and past [[FusedProbeMaxFiles]]; the
-    * partition-constrained probe keeps its verification machinery in
-    * [[hitFileIndexes]] untouched. */
-  private def fusedProbe(m: Manifest, probe: DataFrame, keyColName: String,
-                         extra: Seq[org.apache.spark.sql.Column])
-      : Option[(Set[Int], org.apache.spark.sql.Row)] = {
-    if (m.partitionCols.nonEmpty || m.files.isEmpty ||
-        m.files.size > FusedProbeMaxFiles) None
-    else {
-      val k = Lake.statLong(probe, keyColName)
-      val hitAggs = m.files.zipWithIndex.map { case (f, i) =>
-        max(when(k >= f.minKey && k <= f.maxKey, lit(1))).as(s"_hit_$i") }
-      val aggs = extra ++ hitAggs
-      val row = probe.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val base = extra.size
-      val hit = m.files.indices.filter(i => !row.isNullAt(base + i)).toSet
-      Some((hit, row))
-    }
+    (hit ++ moved, () => extraRow)
   }
 
   /** Copy-on-write MERGE of `updates` on the table's key: rows matching
@@ -4823,40 +4818,24 @@ class LakeTable(spark: SparkSession, val root: String) {
           s"'${logicalName(m, p)}' must carry that column"))
     val probeColsL = (keyCol +: m.partitionCols).map(logicalName(m, _))
     val probeP = toPhysical(m, updates.select(probeColsL.map(col): _*))
-    // one pass for the file-hit probe AND the source-discipline checks /
-    // row count (materializing the lazily-checkpointed source as it
-    // goes); the general path keeps the broadcast range join plus a
-    // separate check aggregate. With sourceRowsHint the caller already
-    // proved the discipline, so only the hit flags are computed.
-    val checkAggs: Seq[org.apache.spark.sql.Column] =
+    // the file-hit probe carries the source-discipline checks / row count
+    // (materializing the lazily-checkpointed source as it goes). With
+    // sourceRowsHint the caller already proved the discipline, so only
+    // the hit set is computed.
+    val (keyHitIdx, checks) = probeFiles(m, probeP,
       if (sourceRowsHint >= 0L) Seq.empty
-      else Seq(count(lit(1)), count(col(keyCol)), count_distinct(col(keyCol)))
-    def requireDiscipline(total: Long, nonNull: Long, distinct: Long): Long = {
-      require(nonNull == total,
-        s"merge source carries ${total - nonNull} " +
-          "null merge keys: a null key can never match a target row")
-      require(distinct == total,
-        "merge requires one source row per key " +
-          "(multiple matches make the result order-dependent)")
-      total
-    }
-    val (keyHitIdx, updateRows) =
-      fusedProbe(m, probeP, keyCol, checkAggs) match {
-        case Some((hit, row)) =>
-          (hit, if (sourceRowsHint >= 0L) sourceRowsHint
-            else requireDiscipline(row.getLong(0), row.getLong(1),
-              row.getLong(2)))
-        case None =>
-          val hit = hitFileIndexes(m, probeP)
-          val n =
-            if (sourceRowsHint >= 0L) sourceRowsHint
-            else {
-              val cnts = updates.agg(count(lit(1)), count(col(lk)),
-                count_distinct(col(lk))).collect()(0)
-              requireDiscipline(cnts.getLong(0), cnts.getLong(1),
-                cnts.getLong(2))
-            }
-          (hit, n)
+      else Seq(count(lit(1)), count(col(keyCol)), count_distinct(col(keyCol))))
+    val updateRows =
+      if (sourceRowsHint >= 0L) sourceRowsHint
+      else {
+        val r = checks()
+        require(r.getLong(1) == r.getLong(0),
+          s"merge source carries ${r.getLong(0) - r.getLong(1)} " +
+            "null merge keys: a null key can never match a target row")
+        require(r.getLong(2) == r.getLong(0),
+          "merge requires one source row per key " +
+            "(multiple matches make the result order-dependent)")
+        r.getLong(0)
       }
     // a NOT MATCHED BY SOURCE clause can fire on ANY target row — but
     // only rows actually satisfying its condition (and matching no
@@ -4880,11 +4859,9 @@ class LakeTable(spark: SparkSession, val root: String) {
           .filter(any)
           .select(lk)
           .join(updates.select(col(lk)), Seq(lk), "left_anti")
-        keyHitIdx ++ hitFileIndexes(m, affected)
+        keyHitIdx ++ probeFiles(m, affected)._1
       }
     val (hit, kept) = m.files.zipWithIndex.partition { case (_, i) => hitIdx(i) }
-    // (source-discipline checks and updateRows computed in the fused
-    // probe pass above)
     // outstanding deferred deletes fold physically into the rewrite AND
     // make tombstoned target rows read as ABSENT for clause matching — a
     // tombstoned source key is NOT MATCHED (its row is deleted) and
@@ -5086,12 +5063,11 @@ class LakeTable(spark: SparkSession, val root: String) {
     // targets are what the reader sees); only the final write crosses
     // into physical names
     val lk = logicalName(m, keyCol)
-    val snap = snapshot(v)
     // resolve each target to the schema's CANONICAL field name once —
     // validation, the type lookup, and withColumns must all agree on
     // case, or a case-mismatched SET passes validation and dies in an
     // opaque "field does not exist" instead of updating
-    val canon = snap.columns.map(c => c.toLowerCase -> c).toMap
+    val canon = snapshot(v).columns.map(c => c.toLowerCase -> c).toMap
     val sets1 = sets.map { case (c, e) =>
       require(keyCol.isEmpty || !c.equalsIgnoreCase(lk),
         s"cannot assign the merge key '$lk' in UPDATE — re-keying is a " +
@@ -5102,29 +5078,11 @@ class LakeTable(spark: SparkSession, val root: String) {
         s"UPDATE of unknown column '$c' — adding columns is schema " +
           "evolution (use MERGE)")) -> e
     }
-    // keyed path: ONE predicate scan serves both the row count and the
-    // file-hit probe (the matching keys are checkpointed lazily, the
-    // count materializes them, and the probe reads the cached blocks) —
-    // the previous shape scanned the snapshot twice, which at 100 TB is
-    // a full extra table pass per UPDATE
-    val (hit, kept, updateRows) =
-      if (keyCol.nonEmpty) {
-        val probeColsL = (keyCol +: m.partitionCols).map(logicalName(m, _))
-        val keys = toPhysical(m, snap.filter(condition)
-          .select(probeColsL.map(col): _*)).localCheckpoint(false)
-        // fused: hit flags + matched-row count in the one predicate scan
-        val (hitIdx, n) =
-          fusedProbe(m, keys, keyCol, Seq(count(lit(1)))) match {
-            case Some((hitF, row)) => (hitF, row.getLong(0))
-            case None => (hitFileIndexes(m, keys), keys.count())
-          }
-        val (h, k) = m.files.zipWithIndex.partition { case (_, i) => hitIdx(i) }
-        (h.map(_._1), k.map(_._1), n)
-      } else {
-        val (h, k) = hitKeptFiles(m, condition)
-        (h, k, if (h.isEmpty) 0L else snap.filter(condition).count())
-      }
+    // the matched-row count rides the file-hit probe's pass (keyed) or
+    // follows the file-identity scan (keyless), only when a file is hit
+    val (hit, kept, matched) = hitKeptFiles(m, condition, Seq(count(lit(1))))
     if (hit.isEmpty) return MergeStats(v, m.files.size, 0, 0, 0L)
+    val updateRows = matched().getLong(0)
     val hitDf = toLogical(m, physical(m, hit))
     require(sets1.map(_._1).distinct.size == sets1.size,
       "UPDATE assigns a column more than once")
@@ -5169,7 +5127,7 @@ class LakeTable(spark: SparkSession, val root: String) {
                                  condition: org.apache.spark.sql.Column)
       : MergeStats = {
     val v = m.version
-    val (hit, kept) = hitKeptFiles(m, condition)
+    val (hit, kept, _) = hitKeptFiles(m, condition)
     if (hit.isEmpty) return MergeStats(v, m.files.size, 0, 0, 0L)
     val survivors = toLogical(m, readFiles(m, hit))
       .filter(!coalesce(condition, lit(false)))
@@ -5203,58 +5161,34 @@ class LakeTable(spark: SparkSession, val root: String) {
     * app's FIRST-ever epoch pays a full metadata walk. (Epoch commits
     * vacuumed past the horizon read as absent; harmless, because the
     * engine's offset log never replays batches that old.) */
-  def hasEpoch(epochId: Long, appId: String = ""): Boolean = {
-    val probe = epochTag(epochId, appId)
-    val prefix = epochPrefix(appId)
-    var v = latestVersion
-    while (v >= 0) {
-      if (hasVersion(v)) {
-        val op = readDelta(v).operation
-        if (op == probe) return true
-        if (op.startsWith(prefix)) {
-          // same-app tags only: the suffix must be a bare epoch id (an
-          // app-qualified tag under an empty-app probe parses as non-Long
-          // and is skipped, not misread)
-          op.stripPrefix(prefix).toLongOption.foreach { id =>
-            if (id < epochId) return false // same app, monotone: gone past
-          }
-        }
-      }
-      v -= 1
-    }
-    false
-  }
+  def hasEpoch(epochId: Long, appId: String = ""): Boolean =
+    epochsBackward(appId).collectFirst {
+      case (_, Some(id)) if id <= epochId => id == epochId // same app, monotone
+    }.getOrElse(false)
 
   /** The LATEST epoch id `appId` ever committed to this table, walking
     * the manifest chain backward to the first same-app tag — the
     * recovery read for consumers that use the chain AS their transaction
     * log (the MV refresh: "what base version does my state reflect?").
     * O(commits since that epoch); vacuumed manifests skip. */
-  def latestEpoch(appId: String): Option[Long] = {
-    val prefix = epochPrefix(appId)
-    var v = latestVersion
-    while (v >= 0) {
-      if (hasVersion(v)) {
-        val op = readDelta(v).operation
-        if (op.startsWith(prefix)) {
-          // bare-suffix check mirrors hasEpoch: an app-qualified tag under
-          // an empty-app probe parses as non-Long and is skipped
-          val id = op.stripPrefix(prefix).toLongOption
-          if (id.isDefined) return id
-        }
-      }
-      v -= 1
-    }
-    None
-  }
+  def latestEpoch(appId: String): Option[Long] =
+    epochsBackward(appId).collectFirst { case (_, Some(id)) => id }
 
   /** Version `v`'s epoch tag on chain `appId`, if that commit carries
-    * one (None for untagged commits and for other chains' tags). */
+    * one (None for untagged commits and for other chains' tags — an
+    * app-qualified tag under an empty-app probe parses as non-Long). */
   def epochTagAt(v: Int, appId: String): Option[Long] = {
     val prefix = epochPrefix(appId)
     val op = readDelta(v).operation
     if (op.startsWith(prefix)) op.stripPrefix(prefix).toLongOption else None
   }
+
+  /** The retained versions from the tip down, each with its epoch tag on
+    * chain `appId` ([[epochTagAt]]) — lazily, so every backward walk
+    * reads only the deltas down to where its answer is known. */
+  private def epochsBackward(appId: String): Iterator[(Int, Option[Long])] =
+    (latestVersion to 0 by -1).iterator.filter(hasVersion)
+      .map(v => (v, epochTagAt(v, appId)))
 
   /** The OLDEST retained epoch-tagged commit whose epoch id EXCEEDS
     * `minEpoch` — the upper bracket for pinned reads through an
@@ -5265,19 +5199,9 @@ class LakeTable(spark: SparkSession, val root: String) {
     * stopping at the first tag ≤ minEpoch — tags are monotone along the
     * chain), so a pin near the tip pays O(commits since the bracket),
     * not O(chain), matching [[latestEpoch]]'s cost discipline. */
-  def firstVersionAboveEpoch(appId: String, minEpoch: Long): Option[Int] = {
-    var v = latestVersion
-    var candidate: Option[Int] = None
-    while (v >= 0) {
-      if (hasVersion(v)) epochTagAt(v, appId) match {
-        case Some(e) if e > minEpoch => candidate = Some(v)
-        case Some(_) => return candidate // first tag ≤ minEpoch: done
-        case None => ()
-      }
-      v -= 1
-    }
-    candidate
-  }
+  def firstVersionAboveEpoch(appId: String, minEpoch: Long): Option[Int] =
+    epochsBackward(appId).collect { case (v, Some(id)) => (v, id) }
+      .takeWhile(_._2 > minEpoch).map(_._1).minOption
 
   /** [[mergeInto]] tagged with a streaming epoch — the conditional-clause
     * twin of [[mergeEpoch]], same at-most-once contract per (appId,
@@ -5378,17 +5302,10 @@ class LakeTable(spark: SparkSession, val root: String) {
     val nRows =
       if (keyCol.isEmpty) rows.count()
       else {
-        // one pass: key-discipline checks + the PK-conflict file probe
-        // (general path: the checks aggregate + the broadcast range join)
-        val checkCols = Seq(count(lit(1)), count(col(keyCol)),
-          count_distinct(col(keyCol)))
-        val (hitIdx, cnts) =
-          fusedProbe(m, rows.select(keyCol), keyCol, checkCols) match {
-            case Some((hitF, row)) => (hitF, row)
-            case None =>
-              (hitFileIndexes(m, rows.select(keyCol)),
-                rows.agg(checkCols.head, checkCols.tail: _*).collect()(0))
-          }
+        // the PK-conflict file probe carries the key-discipline checks
+        val (hitIdx, checks) = probeFiles(m, rows.select(keyCol),
+          Seq(count(lit(1)), count(col(keyCol)), count_distinct(col(keyCol))))
+        val cnts = checks()
         require(cnts.getLong(1) == cnts.getLong(0),
           "insert rows carry null keys")
         require(cnts.getLong(2) == cnts.getLong(0),
@@ -5444,16 +5361,11 @@ class LakeTable(spark: SparkSession, val root: String) {
     val m = manifest(v)
     requireKeyed(m, "DELETE by keys")
     val keyCol = m.keyCol
-    // one pass for the file-hit probe AND the rebase envelope's key
-    // bounds (previously a second aggregate, evaluated on a race)
+    // the rebase envelope's key bounds ride the file-hit probe: free in
+    // its fused pass, else one aggregate run only when a race needs them
     val kc = keys.columns.head
-    val (hitIdx, envBounds) = fusedProbe(m, keys, kc,
-        Seq(min(Lake.statLong(keys, kc)), max(Lake.statLong(keys, kc)))) match {
-      case Some((hit, row)) =>
-        (hit, Some(if (row.isNullAt(0)) None
-                   else Some((row.getLong(0), row.getLong(1)))))
-      case None => (hitFileIndexes(m, keys), None)
-    }
+    val (hitIdx, keyBounds) = probeFiles(m, keys,
+      Seq(min(Lake.statLong(keys, kc)), max(Lake.statLong(keys, kc))))
     val (hit, kept) = m.files.zipWithIndex.partition { case (_, i) => hitIdx(i) }
     val newFiles =
       if (hit.isEmpty) Seq.empty[FileEntry]
@@ -5478,20 +5390,12 @@ class LakeTable(spark: SparkSession, val root: String) {
     val envelope =
       if (!allowRebase) None
       else Some(() => {
-        // bounds from the fused probe pass when it ran, else the
-        // original on-race aggregate
-        val bounds = envBounds.getOrElse {
-          val r = keys
-            .agg(min(Lake.statLong(keys, kc)),
-              max(Lake.statLong(keys, kc))).collect()(0)
-          if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-        }
-        bounds match {
-          case None => (0L, -1L)
-          case Some((kLo, kHi)) =>
-            val (hLo, hHi) = rangeEnvelope(hit.map(_._1))
-            (math.min(kLo, if (hLo > hHi) Long.MaxValue else hLo),
-              math.max(kHi, if (hLo > hHi) Long.MinValue else hHi))
+        val r = keyBounds()
+        if (r.isNullAt(0)) (0L, -1L)
+        else {
+          val (hLo, hHi) = rangeEnvelope(hit.map(_._1))
+          (math.min(r.getLong(0), if (hLo > hHi) Long.MaxValue else hLo),
+            math.max(r.getLong(1), if (hLo > hHi) Long.MinValue else hHi))
         }
       })
     val cv = commitAndIndex(nextDelta(m, "delete")

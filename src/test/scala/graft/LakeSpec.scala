@@ -12,10 +12,10 @@ import graft.sources.Lake
 class LakeSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def mkTable() = {
+  private def mkTable(partitionBy: Seq[String] = Nil) = {
     // 90 rows over keys 1..90, three disjoint-range files (1-30, 31-60, 61-90)
     val df = (1L to 90L).map(k => (k, s"val$k", "A")).toDF("k", "payload", "status")
-    Lake.create(spark, Lake.freshRoot(), df, "k", 3)
+    Lake.create(spark, Lake.freshRoot(), df, "k", 3, partitionBy = partitionBy)
   }
 
   test("create → read roundtrip preserves the relation") {
@@ -676,17 +676,29 @@ class LakeSpec extends SparkTestBase {
     t.manifest(2).operation shouldBe "merge"
   }
   test("mergeInto rejects null merge keys loudly") {
-    val t = mkTable()
     val src = Seq((Some(5L), "OK", "U"), (None, "NULLKEY", "U"))
       .toDF("k", "payload", "status")
-    val verbs = Seq[(String, graft.sources.LakeTable => Any)](
-      "mergeInto" -> (_.mergeInto(src)), "merge" -> (_.merge(src)),
-      "mergeEpoch" -> (_.mergeEpoch(src, 0L)))
-    verbs.foreach { case (name, verb) => withClue(s"$name: ") {
-      val e = intercept[IllegalArgumentException] { verb(t) }
-      e.getMessage should include("null merge keys")
-      t.latestVersion shouldBe 0 // nothing committed
-    } }
+    val dup = Seq((95L, "A", "U"), (95L, "B", "U")).toDF("k", "payload", "status")
+    val verbs = Seq[(String, graft.sources.LakeTable => Any, String)](
+      ("mergeInto", _.mergeInto(src), "null merge keys"),
+      ("merge", _.merge(src), "null merge keys"),
+      ("mergeEpoch", _.mergeEpoch(src, 0L), "null merge keys"),
+      // INSERT's key discipline rides the same probe
+      ("insertAll", _.insertAll(src), "insert rows carry null keys"),
+      ("insertAll dup", _.insertAll(dup),
+        "insert rows carry duplicate keys within the batch"))
+    // unpartitioned tables take the fused probe, partitioned ones the
+    // range join: both refuse before anything commits
+    Seq(Nil, Seq("status")).foreach { partitionBy =>
+      val t = mkTable(partitionBy)
+      verbs.foreach { case (name, verb, msg) =>
+        withClue(s"$name on partitionBy=$partitionBy: ") {
+          val e = intercept[IllegalArgumentException] { verb(t) }
+          e.getMessage should include(msg)
+          t.latestVersion shouldBe 0 // nothing committed
+        }
+      }
+    }
   }
 
   test("mergeInto evaluates its source exactly once (materialization barrier)") {
@@ -761,16 +773,22 @@ class LakeSpec extends SparkTestBase {
       .select("k", "payload").orderBy("k")) shouldBe
       Seq(Seq(5L, "X5"), Seq(7L, "W7"))
     // DELETE of a key that hits nothing must still replay when a winner
-    // concurrently INSERTS that key (serialize-after semantics)
-    val t2 = mkTable()
-    val w2 = new graft.sources.LakeTable(spark, t2.root)
-    var p2 = false
-    t2.onBeforeCommit = () => if (!p2) {
-      p2 = true
-      w2.merge(Seq((100L, "W100", "U")).toDF("k", "payload", "status"))
-    }
-    intercept[java.util.ConcurrentModificationException] {
-      t2.delete(Seq(100L).toDF("k"))
+    // concurrently INSERTS that key (serialize-after semantics) — on a
+    // partitioned table too, whose probe computes the envelope's key
+    // bounds only once the race is lost
+    Seq(Nil, Seq("status")).foreach { partitionBy =>
+      withClue(s"partitionBy=$partitionBy: ") {
+        val t2 = mkTable(partitionBy)
+        val w2 = new graft.sources.LakeTable(spark, t2.root)
+        var p2 = false
+        t2.onBeforeCommit = () => if (!p2) {
+          p2 = true
+          w2.merge(Seq((100L, "W100", "U")).toDF("k", "payload", "status"))
+        }
+        intercept[java.util.ConcurrentModificationException] {
+          t2.delete(Seq(100L).toDF("k"))
+        }
+      }
     }
     // an interleaved ANCHOR commit (compact) always replays
     val t3 = mkTable()
